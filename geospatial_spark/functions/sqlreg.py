@@ -23,6 +23,8 @@ prefix:
    The cell encoders take level / precision as a real **column**
    argument (per-batch unique-value grouping over the vectorized
    kernel), so SQL callers don't need per-level function variants.
+   ``gs_s2_cell`` / ``gs_s2_parent`` are Arrow UDFs (``arrow_udf``) so a
+   NULL argument yields NULL without rounding the batch's BIGINT ids.
 
 Reference surface mirrored: geoparse exposes this vocabulary as plain
 per-call Python functions (gutils.py:227 haversine, gutils.py:137
@@ -40,8 +42,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import LongType, StringType
 
 from ..geo import geohash as gh
@@ -195,31 +198,40 @@ def _sql_udf_defs() -> list[tuple[str, str]]:
     return defs
 
 
-def _grouped_by_scalar(values: pd.Series, scalar: pd.Series, fn):
+def _grouped_by_scalar(args: list[pa.Array], scalar: pa.Array, fn) -> pa.Array:
     """Run a (vectorized-values, python-int) kernel once per distinct
-    scalar value in the batch — lets level/precision be a real column."""
-    out = np.zeros(len(values), dtype=np.int64)
-    sc = scalar.to_numpy()
-    for v in pd.unique(scalar.dropna()):
-        mask = sc == v
+    scalar value in the batch — lets level/precision be a real column.
+    A row with a NULL in ``args`` or ``scalar`` is NULL (SQL semantics)
+    and never reaches the kernel.  Arrow in and out: in pandas, one NULL
+    turns a BIGINT batch into float64 and rounds every 64-bit cell id."""
+    valid = np.ones(len(scalar), dtype=bool)
+    for a in (*args, scalar):
+        valid &= a.is_valid().to_numpy(zero_copy_only=False)
+    out = np.zeros(len(scalar), dtype=np.int64)
+    sc = _filled(scalar)
+    for v in np.unique(sc[valid]):
+        mask = valid & (sc == v)
         out[mask] = fn(mask, int(v))
-    return out
+    return pa.array(out, mask=~valid)
+
+
+def _filled(a: pa.Array) -> np.ndarray:
+    """Null-free numpy view of an Arrow column (NULL slots hold 0)."""
+    return a.fill_null(0).to_numpy(zero_copy_only=False)
 
 
 def _pandas_udf_defs():
-    @pandas_udf(LongType())
-    def gs_s2_cell(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        return pd.Series(
-            _grouped_by_scalar(lat, level, lambda m, lv: s2k.latlng_to_cell(la[m], lo[m], lv))
+    @arrow_udf(LongType())
+    def gs_s2_cell(lat: pa.Array, lon: pa.Array, level: pa.Array) -> pa.Array:
+        la, lo = _filled(lat), _filled(lon)
+        return _grouped_by_scalar(
+            [lat, lon], level, lambda m, lv: s2k.latlng_to_cell(la[m], lo[m], lv)
         )
 
-    @pandas_udf(LongType())
-    def gs_s2_parent(cell: pd.Series, level: pd.Series) -> pd.Series:
-        c = cell.to_numpy()
-        return pd.Series(
-            _grouped_by_scalar(cell, level, lambda m, lv: s2k.parent(c[m], lv))
-        )
+    @arrow_udf(LongType())
+    def gs_s2_parent(cell: pa.Array, level: pa.Array) -> pa.Array:
+        c = _filled(cell)
+        return _grouped_by_scalar([cell], level, lambda m, lv: s2k.parent(c[m], lv))
 
     @pandas_udf(StringType())
     def gs_geohash(lat: pd.Series, lon: pd.Series, p: pd.Series) -> pd.Series:

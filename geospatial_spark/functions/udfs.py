@@ -97,14 +97,6 @@ def s2_token_udf(cell: pd.Series) -> pd.Series:
     return pd.Series(s2k.to_token(cell.to_numpy()), dtype=object)
 
 
-def s2_parent_udf(level: int):
-    @pandas_udf(LongType())
-    def _par(cell: pd.Series) -> pd.Series:
-        return pd.Series(s2k.parent(cell.to_numpy(), level))
-
-    return _par
-
-
 @pandas_udf(IntegerType())
 def s2_level_udf(cell: pd.Series) -> pd.Series:
     return pd.Series(s2k.level(cell.to_numpy()).astype(np.int32))
@@ -122,17 +114,6 @@ def s2_center_udfs():
         return pd.Series(lng)
 
     return _lat, _lng
-
-
-def geohash_neighbors_udf(precision: int, ring: int = 1):
-    """k-ring expansion (N2) — returns the (2r+1)^2 cells around each input."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _ring(cell: pd.Series) -> pd.Series:
-        out = gh.neighbors_ring(cell.to_numpy(), precision, ring)
-        return pd.Series(list(map(list, out)))
-
-    return _ring
 
 
 # --------------------------------------------------------------------------
@@ -201,21 +182,6 @@ def geohash_polyfill_codes_udf(precision: int, mode: str = "intersects"):
                 out.append([])
                 continue
             out.append([int(c) for c in gh.cells_to_codes(cells, precision)])
-        return pd.Series(out)
-
-    return _fill
-
-
-def s2_polyfill_udf(level: int, mode: str = "intersects"):
-    @pandas_udf(ArrayType(LongType()))
-    def _fill(wkb: pd.Series) -> pd.Series:
-        out = []
-        for buf in wkb:
-            if buf is None:
-                out.append(None)
-                continue
-            cells = pf.s2_polyfill(gm.parse_wkb(bytes(buf)), level, mode)
-            out.append([int(c) for c in cells])
         return pd.Series(out)
 
     return _fill

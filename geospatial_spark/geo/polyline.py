@@ -14,8 +14,6 @@ default to 1e-6 like Valhalla.
 
 from __future__ import annotations
 
-import numpy as np
-
 
 def decode(encoded: str, precision: int = 6) -> list[list[float]]:
     """Decode one polyline string → [[lon, lat], ...]."""
@@ -42,11 +40,6 @@ def decode(encoded: str, precision: int = 6) -> list[list[float]]:
                 lat += delta
         coords.append([round(lon * inv, precision), round(lat * inv, precision)])
     return coords
-
-
-def decode_batch(encoded: "np.ndarray", precision: int = 6) -> list:
-    """Batch decode (used by the pandas UDF in functions.udfs)."""
-    return [decode(str(e), precision) if e is not None else None for e in np.asarray(encoded, dtype=object)]
 
 
 def encode(coords, precision: int = 6) -> str:

@@ -4,7 +4,8 @@
 heatmap, ``karta.py:769-775``, *is* a cell aggregation); "vector" = tile →
 bbox polygon → covering cells.  Tile math is pure JVM column arithmetic
 (whole-stage codegen, SQL-expressible → DuckDB oracle); the S2 cell id
-rides along from the pointcell UDF.
+rides along from the pointcell UDF, or from a precomputed cell column
+(``tile_cell_assignments(cell_col=...)``).
 """
 
 from __future__ import annotations
@@ -50,17 +51,23 @@ def tile_cell_assignments(
     s2_level: int = 12,
     lat: str = "lat",
     lon: str = "lon",
+    cell_col: str | None = None,
 ) -> DataFrame:
     """The north rule's tile output: (z, x, y, cell_id, n_points) — which S2
-    cells light up in which tile.  S2 id via Arrow pointcell UDF; everything
+    cells light up in which tile.  S2 id via Arrow pointcell UDF, unless
+    ``cell_col`` names a column already holding the level-``s2_level``
+    cell (then it becomes ``cell_id`` and no Python runs); everything
     else JVM-side."""
-    s2c = udfs.s2_cell_udf(s2_level)
+    if cell_col is None:
+        cell = udfs.s2_cell_udf(s2_level)(F.col(lat), F.col(lon))
+    else:
+        cell = F.col(cell_col)
     return (
         points_df.select(
             F.lit(z).alias("z"),
             udfs.tile_x_col(F.col(lon), z).alias("x"),
             udfs.tile_y_col(F.col(lat), z).alias("y"),
-            s2c(F.col(lat), F.col(lon)).alias("cell_id"),
+            cell.alias("cell_id"),
         )
         .groupBy("z", "x", "y", "cell_id")
         .agg(F.count(F.lit(1)).alias("n_points"))

@@ -10,9 +10,13 @@ Stages (each an icelite table with its own manifest + lineage):
                 by construction, so contiguous id ranges are spatially
                 contiguous — the north star's "range-partition by
                 Hilbert-ordered cells" for large-large joins, giving
-                file-level pruning for cell-range predicates).
+                file-level pruning for cell-range predicates).  The
+                lineage is persisted across the bounds sample and every
+                write batch, so extraction and the S2 Arrow UDF run once
+                per point.
   2. joined   — broadcast PIP join into the region polygons.
-  3. tiles    — z12 tile-cell assignments.
+  3. tiles    — z12 tile-cell assignments; the cell id is the committed
+                ``s2_cell`` column (same level), not a second UDF pass.
 
 Run via ``run(spark, sf_dir, out_root)`` (used by spark-submit and the
 resume test).  Each stage skips partitions already committed — rerunning
@@ -21,6 +25,7 @@ after a kill completes only the remainder.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,22 +99,30 @@ def run(
 ) -> dict:
     """Execute all stages with lineage; returns {stage: manifest}."""
     s2c = udfs.s2_cell_udf(S2_LEVEL)
+    # the bounds sample and every write batch each run an action over this
+    # lineage; unpersisted, each re-runs extraction and the S2 UDF (and a
+    # batch's __pid filter is pushed into the gazetteer broadcast side,
+    # running the UDF there too)
     points = (
         src.extract_points(src.pages(spark, sf_dir), src.gazetteer(spark))
         .withColumn("s2_cell", s2c(F.col("lat"), F.col("lon")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bounds = hilbert_range_bounds(points, "s2_cell", n_partitions)
     manifests = {}
-    manifests["points"] = ice.write_partitioned(
-        points,
-        out_root,
-        "points",
-        stage="extract_geocode",
-        key_col="s2_cell",
-        batch_size=batch_size,
-        fail_after_batches=fail_after_batches,
-        range_bounds=bounds,
-    )
+    try:
+        bounds = hilbert_range_bounds(points, "s2_cell", n_partitions)
+        manifests["points"] = ice.write_partitioned(
+            points,
+            out_root,
+            "points",
+            stage="extract_geocode",
+            key_col="s2_cell",
+            batch_size=batch_size,
+            fail_after_batches=fail_after_batches,
+            range_bounds=bounds,
+        )
+    finally:
+        points.unpersist()
 
     pts = ice.read_table(spark, out_root, "points")
     joined = pj.pip_join(
@@ -130,7 +143,9 @@ def run(
         batch_size=batch_size,
     )
 
-    tiles = tiling.tile_cell_assignments(pts, z=12, s2_level=S2_LEVEL)
+    tiles = tiling.tile_cell_assignments(
+        pts, z=12, s2_level=S2_LEVEL, cell_col="s2_cell"
+    )
     manifests["tiles"] = ice.write_partitioned(
         tiles,
         out_root,
@@ -178,7 +193,6 @@ def run_corpus(
     Every stage is JVM-side except the shingle kernels the dedup family
     already owns; drop reasons are mutually exclusive and evaluated in
     the order above (a doc is audited under the FIRST gate it fails)."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     from .functions import caching

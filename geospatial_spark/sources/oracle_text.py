@@ -397,39 +397,6 @@ FROM pages p LEFT JOIN hits h ON h.id = p.url"""
     )
 
 
-def corpus_split_sql(buckets: int = 100, train_lt: int = 98, val_lt: int = 99) -> str:
-    return _with_pages(
-        f"""s AS (SELECT lang, {TH.h60_sql('url')} % {buckets} AS b FROM pages)
-SELECT lang, CASE WHEN b < {train_lt} THEN 'train'
-                  WHEN b < {val_lt} THEN 'val' ELSE 'test' END AS split,
-       count(*) AS n
-FROM s GROUP BY 1, 2"""
-    )
-
-
-def lsh_bucket_stats_sql(max_bucket: int = 8) -> str:
-    """Overflow report oracle for the capped LSH candidate generation."""
-    sh = TH.word_shingles_sql("text")
-    mins = ", ".join(TH.minhash_min_aggs_sql("h"))
-    keys = ", ".join(TH.band_key_sql(b) for b in range(TH.MINHASH_BANDS))
-    bands_union = "\nUNION ALL ".join(
-        f"SELECT id, {b} AS band, bk{b} AS key FROM keys"
-        for b in range(TH.MINHASH_BANDS)
-    )
-    return _with_pages(
-        f"""shr AS (SELECT url AS id, unnest({sh}) AS s FROM pages),
-shh AS (SELECT DISTINCT id, {TH.h60_sql('s')} AS h FROM shr),
-sigs AS (SELECT id, {mins} FROM shh GROUP BY id),
-keys AS (SELECT id, {keys} FROM sigs),
-bands AS ({bands_union}),
-sizes AS (SELECT band, key, count(*) AS c FROM bands GROUP BY 1, 2)
-SELECT count(*) AS n_buckets,
-       CAST(sum(CASE WHEN c > {max_bucket} THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
-       max(c) AS max_bucket_size
-FROM sizes"""
-    )
-
-
 def dedup_block_stats_sql(
     max_bucket: int = 8,
     threshold_ppm: int = 800_000,

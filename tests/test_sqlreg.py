@@ -152,6 +152,38 @@ def test_pandas_backed_mixed_scalar_args(sql_spark):
     assert all(r["v"] == 6 for r in tok)
 
 
+def test_s2_cell_parent_null_argument_is_null(sql_spark):
+    """SQL NULL semantics: a NULL lat, lon, cell or level yields NULL (not
+    cell 0), and the NULLs sharing one Arrow batch with valid rows leave
+    those rows' 64-bit ids exact (a level-30 parent is the cell itself)."""
+    spark = sql_spark
+    c30 = int(s2k.latlng_to_cell(np.array([-33.9]), np.array([151.2]), 30)[0])
+    want12 = int(s2k.latlng_to_cell(np.array([48.85]), np.array([2.29]), 12)[0])
+    df = spark.createDataFrame(
+        [
+            (0, 48.85, 2.29, 12, c30, 30),
+            (1, 48.85, 2.29, None, None, 30),
+            (2, None, 2.29, 12, c30, None),
+            (3, 48.85, None, 12, c30, 30),
+        ],
+        "id int, lat double, lon double, lvl int, cell long, plvl int",
+    ).coalesce(1)
+    got = {
+        r["id"]: (r["c"], r["p"])
+        for r in df.select(
+            "id",
+            F.expr("gs_s2_cell(lat, lon, lvl)").alias("c"),
+            F.expr("gs_s2_parent(cell, plvl)").alias("p"),
+        ).collect()
+    }
+    assert got == {
+        0: (want12, c30),
+        1: (None, None),
+        2: (None, None),
+        3: (None, c30),
+    }
+
+
 def test_url_host_registrable_domain_parity(sql_spark):
     """gs_url_host / gs_registrable_domain vs their Column-builder twins
     (operators/domains.py) over the goldens from tests/test_domains.py plus
