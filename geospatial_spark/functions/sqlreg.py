@@ -23,8 +23,9 @@ prefix:
    The cell encoders take level / precision as a real **column**
    argument (per-batch unique-value grouping over the vectorized
    kernel), so SQL callers don't need per-level function variants.
-   ``gs_s2_cell`` / ``gs_s2_parent`` are Arrow UDFs (``arrow_udf``) so a
-   NULL argument yields NULL without rounding the batch's BIGINT ids.
+   ``gs_s2_cell`` / ``gs_s2_parent`` / ``gs_s2_token`` / ``gs_s2_level``
+   are Arrow UDFs (``arrow_udf``) so a NULL argument yields NULL without
+   rounding the batch's BIGINT ids.
 
 Reference surface mirrored: geoparse exposes this vocabulary as plain
 per-call Python functions (gutils.py:227 haversine, gutils.py:137

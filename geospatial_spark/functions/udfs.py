@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -92,14 +93,24 @@ def s2_cell_udf(level: int):
     return _enc
 
 
-@pandas_udf(StringType())
-def s2_token_udf(cell: pd.Series) -> pd.Series:
-    return pd.Series(s2k.to_token(cell.to_numpy()), dtype=object)
+def _cell_ids(cell: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(NULL mask, ids with the NULL slots filled by 0) of an Arrow BIGINT
+    cell column.  Arrow, not pandas: in pandas one NULL turns the batch
+    into float64 and rounds every other 64-bit cell id."""
+    nulls = cell.is_null().to_numpy(zero_copy_only=False)
+    return nulls, cell.fill_null(0).to_numpy(zero_copy_only=False)
 
 
-@pandas_udf(IntegerType())
-def s2_level_udf(cell: pd.Series) -> pd.Series:
-    return pd.Series(s2k.level(cell.to_numpy()).astype(np.int32))
+@arrow_udf(StringType())
+def s2_token_udf(cell: pa.Array) -> pa.Array:
+    nulls, ids = _cell_ids(cell)
+    return pa.array(s2k.to_token(ids), type=pa.string(), mask=nulls)
+
+
+@arrow_udf(IntegerType())
+def s2_level_udf(cell: pa.Array) -> pa.Array:
+    nulls, ids = _cell_ids(cell)
+    return pa.array(s2k.level(ids).astype(np.int32), mask=nulls)
 
 
 def s2_center_udfs():

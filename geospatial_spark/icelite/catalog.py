@@ -10,17 +10,38 @@ to ``spark.read.format("iceberg")`` + a real metrics table untouched.
 
 Layout::
 
-    {root}/{table}/data/pid={P}/*.parquet      -- partition P's rows
-    {root}/{table}/metadata/v{N}.json          -- snapshot manifest
-    {root}/{table}/metadata/VERSION            -- atomic pointer (rename swap)
+    {root}/{table}/data/__batch=<tag>/__pid=<P>/*.parquet
+                                        -- partition P's rows, as written by
+                                           the commit whose batch tag is <tag>
+    {root}/{table}/metadata/v{N}.json   -- snapshot manifest
+    {root}/{table}/metadata/VERSION     -- atomic pointer (rename swap)
+    {root}/{table}/metadata/inflight/<tag>
+                                        -- marker: <tag>'s directory is being
+                                           written by a live, uncommitted job
+    {root}/{table}/metadata/.commit.lock
+                                        -- flock serializing the manifest CAS
 
-Manifest: schema DDL + one record per committed partition
-(partition_id, row_count, key_min, key_max, checksum, committed_at).
+Batch tags: ``b<V>-<uuid>`` (write_partitioned), the caller's ``batch_tag``
+(append_batch), ``c<V>-<uuid>`` (rewrite_files).
 
-Commit protocol: partitions are written in batches; after each batch the
-new manifest is written to a temp file and ``os.rename``-swapped — a kill
-between batches loses at most the in-flight batch, and a rerun skips every
-partition already in the manifest (resume = anti-join on partition_id).
+Manifest keys: ``table``, ``schema`` (frozen DDL), ``stage``, ``key_col``,
+``n_partitions``, ``version``, ``range_bounds`` (None for hash tables),
+``writer`` (``"batch"`` for write_partitioned tables, ``"append"`` for
+append_batch tables), ``partitions`` and — after a compaction —
+``retired_batches`` (every batch tag compacted away, so streaming replays
+stay no-ops).  Each ``partitions`` record holds ``partition_id`` (the
+lineage key: the raw pid for batch tables, ``version*n + pid`` for append
+tables), ``pid`` (the raw ``__pid`` its files carry), ``batch`` (its tag),
+``row_count``, ``key_min``, ``key_max``, ``checksum``, ``stage`` and
+``committed_at``.
+
+Commit protocol: every write goes through ``_commit_batch`` — mark the tag
+in flight, write the batch directory, read its per-partition stats back
+from the files, check that the read-back holds exactly the rows written
+(row conservation), then CAS-swap the new manifest in (temp file +
+``os.rename``).  A kill before the swap leaves an orphan directory no
+reader lists; a rerun skips every partition already in the manifest
+(resume = anti-join on partition_id) and garbage-collects the orphan.
 
 Scale notes: each batch is one distributed filter+write job over only that
 batch's partitions (partition pruning on the hash key), plus one partial-agg
@@ -36,10 +57,11 @@ import json
 import os
 import time
 import uuid
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructType
 
 LINEAGE_SCHEMA = (
     "stage string, partition_id int, key_min bigint, key_max bigint, "
@@ -96,50 +118,23 @@ def committed_partitions(root: str, table: str) -> set[int]:
     return {rec["partition_id"] for rec in man["partitions"]}
 
 
-def _rec_pid(rec: dict[str, Any], n_partitions: int) -> int:
-    """The RAW ``__pid`` a manifest record's files carry.  Records written
-    since round 5 store it explicitly (``pid``); the fallback reconstructs
-    it for legacy manifests — write_partitioned ids were already raw
-    (< n), append ids were namespaced ``version*n + pid``, and ``% n``
-    inverts both."""
-    return int(rec.get("pid", rec["partition_id"] % n_partitions))
-
-
-def _writer_kind(man: dict[str, Any]) -> str:
-    """'batch' (write_partitioned) or 'append' (append_batch).  Recorded
-    explicitly since round 5; legacy manifests are inferred from the
-    partition_id namespacing (any namespaced id ⇒ append)."""
-    w = man.get("writer")
-    if w:
-        return str(w)
-    n = man["n_partitions"]
-    if any(rec["partition_id"] != _rec_pid(rec, n) for rec in man["partitions"]):
-        return "append"
-    return "batch"
-
-
-def _committed_batch_pid_filter(man: dict[str, Any]):
-    """Reader-side committed-data predicate: OR over batches of
-    ``(__batch == b) & __pid.isin(raw pids of b)``.  The round-4 reader
-    filtered ``__pid.isin(all partition_ids)`` — but ``partition_id`` is a
-    NAMESPACED lineage key for appended batches (version*n + pid) while
-    the parquet files carry the raw ``__pid``, so any appended batch
-    writing a pid the version-0 batch did not cover was silently dropped
-    (round-4 advice, high).  Both ``__batch`` and ``__pid`` are partition
-    columns, so the disjunction of conjunctions still prunes at
-    file-listing time.  Returns None when no batch has data."""
-    n = man["n_partitions"]
+def _committed_batch_pid_filter(recs: Iterable[dict[str, Any]]) -> Column | None:
+    """Reader-side committed-data predicate over manifest records: OR over
+    batches of ``(__batch == b) & __pid.isin(raw pids of b)``.  The
+    round-4 reader filtered ``__pid.isin(all partition_ids)`` — but
+    ``partition_id`` is a NAMESPACED lineage key for appended batches
+    (version*n + pid) while the parquet files carry the raw ``__pid``, so
+    any appended batch writing a pid the version-0 batch did not cover was
+    silently dropped (round-4 advice, high).  Both ``__batch`` and
+    ``__pid`` are partition columns, so the disjunction of conjunctions
+    still prunes at file-listing time.  Returns None when no record has a
+    batch."""
     by_batch: dict[str, set[int]] = {}
-    for rec in man["partitions"]:
-        b = rec.get("batch")
-        if not b:
-            continue
-        by_batch.setdefault(b, set()).add(_rec_pid(rec, n))
+    for rec in recs:
+        by_batch.setdefault(rec["batch"], set()).add(rec["pid"])
     cond = None
     for b in sorted(by_batch):
-        c = (F.col("__batch") == b) & F.col("__pid").isin(
-            sorted(by_batch[b])
-        )
+        c = (F.col("__batch") == b) & F.col("__pid").isin(sorted(by_batch[b]))
         cond = c if cond is None else (cond | c)
     return cond
 
@@ -194,30 +189,217 @@ def _swap_manifest(
             fcntl.flock(lock, fcntl.LOCK_UN)
 
 
-def _batch_stats(df: DataFrame, key_col: str, batch_dir: str) -> list:
-    """Per-partition lineage stats by READING BACK the files just written
-    (not by re-evaluating the input lineage): read_range treats (key_min,
-    key_max) as a correctness-bearing pruning index, and a
-    nondeterministic source re-evaluated for a second stats job could
-    record bounds that disagree with the committed data — silently
-    dropping rows from pruned reads.  The read-back scans only this
-    batch's directory (freshly written, page-cache warm).  Empty batch
-    (partitionBy wrote no files) → []."""
-    if not os.path.isdir(batch_dir):
-        return []
-    written = df.sparkSession.read.parquet(batch_dir)
+def _pid_column(key_col: str, n: int, range_bounds: list[int] | None) -> Column:
+    """The partition id of a row: RANGE over the key when ``range_bounds``
+    is given (pid i holds keys in (bounds[i-1], bounds[i]]), else
+    ``pmod(xxhash64(key), n)``.  The one expression every writer buckets
+    rows with, so a compaction re-buckets exactly like the commit did."""
+    if range_bounds is None:
+        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
+    pid = F.lit(len(range_bounds))
+    for i in range(len(range_bounds) - 1, -1, -1):
+        pid = F.when(F.col(key_col) <= F.lit(range_bounds[i]), F.lit(i)).otherwise(pid)
+    return pid.cast("int")
+
+
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _partition_stats(frame: DataFrame, key_col: str, group_cols: list[str]) -> list:
+    """Per-partition lineage stats of ``frame`` grouped by ``group_cols``:
+    row count, key min/max and the order-insensitive checksum
+    ``bit_xor(xxhash64(data columns))`` over the data columns in
+    file-schema order (xxhash64 is column-order sensitive; ``__batch`` and
+    ``__pid`` are directory-derived, not data).  The commit's read-back and
+    ``verify_table`` both call this, so the manifest index and the fsck
+    can never disagree on how a partition is summarized.  Column names are
+    backtick-quoted: a name like ``n-chars`` is data, not an expression."""
+    data = [c for c in frame.columns if c not in ("__batch", "__pid")]
+    key = _quoted(key_col).cast("bigint")
     return (
-        written.groupBy("__pid")
+        frame.groupBy(*group_cols)
         .agg(
             F.count(F.lit(1)).alias("row_count"),
-            F.min(F.col(key_col).cast("bigint")).alias("key_min"),
-            F.max(F.col(key_col).cast("bigint")).alias("key_max"),
-            F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias(
-                "checksum"
-            ),
+            F.min(key).alias("key_min"),
+            F.max(key).alias("key_max"),
+            F.bit_xor(F.xxhash64(*[_quoted(c) for c in data])).alias("checksum"),
         )
         .collect()
     )
+
+
+def _new_manifest(
+    df: DataFrame, table: str, *, stage: str, key_col: str, n_partitions: int,
+    range_bounds: list[int] | None, writer: str,
+) -> dict[str, Any]:
+    return {
+        "table": table,
+        "schema": df.schema.simpleString(),
+        "stage": stage,
+        "key_col": key_col,
+        "n_partitions": n_partitions,
+        "version": 0,
+        "range_bounds": range_bounds,
+        "writer": writer,
+        "partitions": [],
+    }
+
+
+def _check_frozen(
+    man: dict[str, Any], df: DataFrame, table: str, key_col: str,
+    n_partitions: int | None, verb: str,
+) -> None:
+    """Guards shared by a write_partitioned resume and an append: the
+    committed key, schema and hash width are the only valid ones —
+    silently proceeding with others would assign the new rows under a
+    partitioning inconsistent with the committed files (round-2 advice).
+    ``n_partitions`` None skips the width check (a range table's width is
+    fixed by its committed ``range_bounds``)."""
+    if man["key_col"] != key_col:
+        raise ValueError(
+            f"{verb} table {table!r} with key_col={key_col!r} but "
+            f"manifest committed key_col={man['key_col']!r}"
+        )
+    if df.schema.simpleString() != man["schema"]:
+        # schema drift guard: mixed-schema batch dirs under one table make
+        # the parquet scan's inferred schema depend on which file footer
+        # Spark samples — columns silently null out or vanish.  This
+        # catalog does NOT do Iceberg-style schema evolution; fail loudly
+        # instead (documented divergence).
+        raise ValueError(
+            f"{verb} table {table!r} with schema {df.schema.simpleString()} "
+            f"but manifest committed {man['schema']}; icelite tables are "
+            "schema-frozen"
+        )
+    if n_partitions is not None and n_partitions != man["n_partitions"]:
+        # the per-batch partition_id namespace of append tables is
+        # version*n_partitions + pid — mixed widths would interleave ids
+        raise ValueError(
+            f"{verb} table {table!r} with n_partitions={n_partitions} but "
+            f"manifest committed {man['n_partitions']} partitions"
+        )
+
+
+def _raiser(message: str) -> Callable[[], None]:
+    """An ``after_write`` hook that crashes the commit (injected-failure
+    knobs of the crash-window tests)."""
+
+    def crash() -> None:
+        raise RuntimeError(message)
+
+    return crash
+
+
+def _commit_batch(
+    man: dict[str, Any],
+    staged: DataFrame,
+    root: str,
+    table: str,
+    tag: str,
+    *,
+    stage: str,
+    required_pids: Iterable[int],
+    replace: bool,
+    after_write: Callable[[], None] | None = None,
+    expected_rows: int | None = None,
+) -> dict[str, Any]:
+    """Write ``staged`` (carrying ``__pid`` and ``__batch`` = ``tag``) as
+    one batch directory and commit it on top of ``man``; returns the new
+    manifest.  The one commit path of every icelite writer:
+
+    1. mark ``tag`` in flight (shields the directory from other writers'
+       GC until the swap), then write it;
+    2. ``after_write()`` — the writers' injected crashes fire here, after
+       the data write and before anything is committed;
+    3. read the per-partition stats back from the written FILES (not by
+       re-evaluating the input lineage): read_range treats (key_min,
+       key_max) as a correctness-bearing pruning index, and a
+       nondeterministic source re-evaluated for a second stats job could
+       record bounds that disagree with the committed data;
+    4. row conservation: the read-back must hold exactly the rows the
+       write wrote — counted by an ``Observation`` on the write itself, or
+       ``expected_rows`` when the caller knows the figure (a compaction
+       must re-commit exactly its base manifest's rows).  Any loss — a
+       concurrent GC deleting the in-flight directory, a partial write —
+       aborts loudly instead of committing a manifest that silently
+       shrank the table.  The read-back ignores files that vanish after
+       listing, so that race lands here too;
+    5. one record per pid in ``required_pids`` ∪ the pids that hold rows
+       (a single empty placeholder record when both are empty, so the tag
+       is still committed and a replay skips it), appended to — or with
+       ``replace``, replacing — the manifest's records; a replace retires
+       every batch tag it compacts away;
+    6. CAS-swap the manifest against ``man``'s version, then clear the
+       in-flight marker whether the commit won, lost or was refused.
+
+    A crash in steps 1-3 keeps the marker, like a killed job would: the
+    directory stays shielded until the writer's own retry (or the marker
+    TTL) reclaims it.
+    """
+    obs = None
+    if expected_rows is None:
+        # the write's own row count: a CollectMetrics node on the write
+        # plan, no extra job (observe must stay the LAST step before the
+        # write — on a shuffle+sort plan it would perturb the sort)
+        obs = Observation()
+        staged = staged.observe(obs, F.count(F.lit(1)).alias("rows"))
+    _mark_inflight(root, table, tag)
+    staged.write.mode("append").partitionBy("__batch", "__pid").parquet(
+        _data_dir(root, table)
+    )
+    if after_write is not None:
+        after_write()
+    batch_dir = os.path.join(_data_dir(root, table), f"__batch={tag}")
+    stats = []  # an empty batch writes no directory at all
+    if os.path.isdir(batch_dir):
+        reader = staged.sparkSession.read.option("ignoreMissingFiles", True)
+        written = reader.parquet(batch_dir)
+        stats = _partition_stats(written, man["key_col"], ["__pid"])
+    try:
+        wrote = expected_rows if obs is None else obs.get["rows"]
+        read_back = sum(r["row_count"] for r in stats)
+        if read_back != wrote:
+            raise RuntimeError(
+                f"commit of batch {tag!r} into {table!r} read back "
+                f"{read_back} rows but {wrote} were written (base manifest "
+                f"v{man['version']}); aborting without commit "
+                "(row-conservation guard)"
+            )
+        n = man["n_partitions"]
+        base_pid = man["version"] * n if man["writer"] == "append" else 0
+        by_pid = {int(r["__pid"]): r for r in stats}
+        now = time.time()
+        recs = []
+        for p in sorted(set(required_pids) | set(by_pid)) or [0]:
+            r = by_pid.get(p)
+            recs.append(
+                {
+                    "partition_id": base_pid + p,
+                    "pid": p,
+                    "batch": tag,
+                    "row_count": r["row_count"] if r else 0,
+                    "key_min": r["key_min"] if r else None,
+                    "key_max": r["key_max"] if r else None,
+                    "checksum": r["checksum"] if r else 0,
+                    "stage": stage,
+                    "committed_at": now,
+                }
+            )
+        new = dict(man, version=man["version"] + 1)
+        if replace:
+            new["partitions"] = recs
+            new["retired_batches"] = sorted(
+                set(man.get("retired_batches", []))
+                | {rec["batch"] for rec in man["partitions"]}
+            )
+        else:
+            new["partitions"] = man["partitions"] + recs
+        # a fresh table's unsaved manifest is v0; committed ones are >= v1
+        _swap_manifest(root, table, new, expected_version=man["version"] or None)
+    finally:
+        _clear_inflight(root, table, tag)
+    return new
 
 
 def write_partitioned(
@@ -255,78 +437,40 @@ def write_partitioned(
     """
     _assert_local_root(root)
     man = current_manifest(root, table)
-    prev_version = None if man is None else man["version"]
-    if man is not None:
+    if man is None:
+        if range_bounds is not None:
+            n_partitions = len(range_bounds) + 1
+        man = _new_manifest(
+            df, table, stage=stage, key_col=key_col, n_partitions=n_partitions,
+            range_bounds=range_bounds, writer="batch",
+        )
+    else:
         # cross-mode guard (round-4 advice): a resume over an APPENDED
         # table would misread namespaced append partition_ids as its own
         # raw pids and silently skip those partitions forever
-        if _writer_kind(man) != "batch":
+        if man["writer"] != "batch":
             raise ValueError(
                 f"table {table!r} was committed by append_batch "
                 "(streaming-append mode); write_partitioned cannot resume it"
             )
-        # resume guard (round-2 advice): the committed partitioning is the
-        # only valid one — silently proceeding with a different mode/bounds/
-        # partition count would assign remaining rows under a partitioning
-        # inconsistent with the committed files.
-        committed_key = man.get("key_col")
-        if committed_key is not None and committed_key != key_col:
+        if man["range_bounds"] is None and range_bounds is not None:
             raise ValueError(
-                f"resume of table {table!r} with key_col={key_col!r} but "
-                f"manifest committed key_col={committed_key!r}"
+                f"resume of hash-partitioned table {table!r} with "
+                "range_bounds; the committed partitioning is hash"
             )
-        if df.schema.simpleString() != man["schema"]:
-            # a resume with a drifted schema would complete the remaining
-            # partitions under a DIFFERENT schema than the committed ones
-            raise ValueError(
-                f"resume of table {table!r} with schema "
-                f"{df.schema.simpleString()} but manifest committed "
-                f"{man['schema']}; icelite tables are schema-frozen"
-            )
-        committed_bounds = man.get("range_bounds")
-        if committed_bounds is not None:
-            # committed bounds win over recomputed/omitted bounds (a rerun
-            # whose recomputed bounds drift can never mis-assign rows
-            # relative to committed partitions)
-            range_bounds = committed_bounds
-        else:
-            if range_bounds is not None:
-                raise ValueError(
-                    f"resume of hash-partitioned table {table!r} with "
-                    "range_bounds; the committed partitioning is hash"
-                )
-            if n_partitions != man["n_partitions"]:
-                raise ValueError(
-                    f"resume of table {table!r} with n_partitions="
-                    f"{n_partitions} but manifest committed "
-                    f"{man['n_partitions']} partitions"
-                )
-    if range_bounds is not None:
-        n_partitions = len(range_bounds) + 1
-        pid_expr = F.lit(len(range_bounds))
-        for i in range(len(range_bounds) - 1, -1, -1):
-            pid_expr = F.when(
-                F.col(key_col) <= F.lit(range_bounds[i]), F.lit(i)
-            ).otherwise(pid_expr)
-        pid = pid_expr.cast("int")
-    else:
-        pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_partitions)).cast("int")
-    staged = df.withColumn("__pid", pid)
+        _check_frozen(
+            man, df, table, key_col,
+            n_partitions if man["range_bounds"] is None else None, "resume of",
+        )
+        # committed bounds win over recomputed/omitted bounds (a rerun
+        # whose recomputed bounds drift can never mis-assign rows
+        # relative to committed partitions)
+        range_bounds = man["range_bounds"]
+        n_partitions = man["n_partitions"]
+    staged = df.withColumn("__pid", _pid_column(key_col, n_partitions, range_bounds))
 
-    done = committed_partitions(root, table)
+    done = {rec["partition_id"] for rec in man["partitions"]}
     todo = [p for p in range(n_partitions) if p not in done]
-    if man is None:
-        man = {
-            "table": table,
-            "schema": df.schema.simpleString(),
-            "stage": stage,
-            "key_col": key_col,
-            "n_partitions": n_partitions,
-            "version": 0,
-            "range_bounds": range_bounds,
-            "writer": "batch",
-            "partitions": [],
-        }
     _gc_orphan_batches(root, table, man, own_prefixes=("b",))
 
     batches = [todo[i : i + batch_size] for i in range(0, len(todo), batch_size)]
@@ -337,47 +481,17 @@ def write_partitioned(
         part = staged.filter(F.col("__pid").isin(batch)).withColumn(
             "__batch", F.lit(bname)
         )
-        _mark_inflight(root, table, bname)
-        (
-            part.write.mode("append")
-            .partitionBy("__batch", "__pid")
-            .parquet(_data_dir(root, table))
-        )
-        if fail_mid_commit is not None and bi >= fail_mid_commit:
-            # crash INSIDE the commit window: data written, manifest not yet
-            # swapped — the batch dir is an orphan the resume must ignore
-            raise RuntimeError(
+        # crash INSIDE the commit window: data written, manifest not yet
+        # swapped — the batch dir is an orphan the resume must ignore
+        crash = fail_mid_commit is not None and bi >= fail_mid_commit
+        man = _commit_batch(
+            man, part, root, table, bname, stage=stage, required_pids=batch,
+            replace=False,
+            after_write=_raiser(
                 f"injected failure after data write of batch {bi}, before "
                 "manifest swap (crash-window resume test)"
-            )
-        stats = _batch_stats(
-            df, key_col, f"{_data_dir(root, table)}/__batch={bname}"
+            ) if crash else None,
         )
-        now = time.time()
-        by_pid = {r["__pid"]: r for r in stats}
-        for p in batch:
-            r = by_pid.get(p)
-            man["partitions"].append(
-                {
-                    "partition_id": p,
-                    "pid": p,
-                    "batch": bname,
-                    "row_count": r["row_count"] if r else 0,
-                    "key_min": r["key_min"] if r else None,
-                    "key_max": r["key_max"] if r else None,
-                    "checksum": r["checksum"] if r else 0,
-                    "stage": stage,
-                    "committed_at": now,
-                }
-            )
-        man["version"] += 1
-        try:
-            _swap_manifest(root, table, man, expected_version=prev_version)
-        finally:
-            # committed (dir is live) or CAS-lost (dir is a plain orphan):
-            # either way the in-flight shield is no longer needed
-            _clear_inflight(root, table, bname)
-        prev_version = man["version"]
     return man
 
 
@@ -410,9 +524,13 @@ def append_batch(
     if "/" in batch_tag or "=" in batch_tag:
         raise ValueError(f"invalid batch_tag {batch_tag!r}")
     man = current_manifest(root, table)
-    prev_version = None if man is None else man["version"]
-    if man is not None:
-        if any(rec.get("batch") == batch_tag for rec in man["partitions"]):
+    if man is None:
+        man = _new_manifest(
+            df, table, stage=stage, key_col=key_col, n_partitions=n_partitions,
+            range_bounds=None, writer="append",
+        )
+    else:
+        if any(rec["batch"] == batch_tag for rec in man["partitions"]):
             return man  # replayed batch — already committed, exactly-once
         if batch_tag in man.get("retired_batches", []):
             # the batch was committed and later COMPACTED away
@@ -420,7 +538,7 @@ def append_batch(
             # a checkpoint replay must stay a no-op — re-appending would
             # double them (the replay-after-compaction hazard)
             return man
-        if _writer_kind(man) != "append":
+        if man["writer"] != "append":
             # cross-mode guard (round-4 advice): appending to a
             # write_partitioned table would interleave hash-append pids
             # with the committed (possibly RANGE) partitioning, and a
@@ -429,109 +547,28 @@ def append_batch(
                 f"table {table!r} was committed by write_partitioned "
                 "(batch mode); append_batch cannot extend it"
             )
-        if man.get("range_bounds") is not None:
-            raise ValueError(
-                f"table {table!r} is range-partitioned; append_batch "
-                "supports hash partitioning only"
-            )
-        if man.get("key_col") != key_col:
-            raise ValueError(
-                f"append to table {table!r} with key_col={key_col!r} but "
-                f"manifest committed key_col={man.get('key_col')!r}"
-            )
-        if df.schema.simpleString() != man["schema"]:
-            # schema drift guard: mixed-schema batch dirs under one table
-            # make the parquet scan's inferred schema depend on which file
-            # footer Spark samples — columns silently null out or vanish.
-            # This catalog does NOT do Iceberg-style schema evolution;
-            # fail loudly instead (documented divergence).
-            raise ValueError(
-                f"append to table {table!r} with schema "
-                f"{df.schema.simpleString()} but manifest committed "
-                f"{man['schema']}; icelite tables are schema-frozen"
-            )
-        if n_partitions != man["n_partitions"]:
-            # the per-batch partition_id namespace is version*n_partitions
-            # + pid — mixed widths would interleave ids across batches
-            raise ValueError(
-                f"append to table {table!r} with n_partitions="
-                f"{n_partitions} but manifest committed "
-                f"{man['n_partitions']}"
-            )
-    else:
-        man = {
-            "table": table,
-            "schema": df.schema.simpleString(),
-            "stage": stage,
-            "key_col": key_col,
-            "n_partitions": n_partitions,
-            "version": 0,
-            "range_bounds": None,
-            "writer": "append",
-            "partitions": [],
-        }
+        _check_frozen(man, df, table, key_col, n_partitions, "append to")
     # removes THIS tag's crashed try too (own prefix = the exact tag; other
     # streaming tags' in-flight dirs stay shielded by their markers)
     _gc_orphan_batches(root, table, man, own_prefixes=(batch_tag,))
 
-    pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_partitions)).cast("int")
-    staged = df.withColumn("__pid", pid).withColumn("__batch", F.lit(batch_tag))
-    _mark_inflight(root, table, batch_tag)
-    (
-        staged.write.mode("append")
-        .partitionBy("__batch", "__pid")
-        .parquet(_data_dir(root, table))
-    )
-    if fail_before_swap:
-        raise RuntimeError(
+    staged = df.withColumn(
+        "__pid", _pid_column(key_col, n_partitions, None)
+    ).withColumn("__batch", F.lit(batch_tag))
+    # an empty micro-batch still commits its tag (replay skip).  A
+    # conflicting concurrent commit (e.g. a compaction finishing during
+    # this micro-batch) raises ConcurrentCommitError → the streaming query
+    # fails and its restart REPLAYS the batch: the tag was never
+    # committed, the orphan data dir is GC'd, and the append is attempted
+    # again — exactly-once holds through the conflict
+    return _commit_batch(
+        man, staged, root, table, batch_tag, stage=stage, required_pids=[],
+        replace=False,
+        after_write=_raiser(
             f"injected failure after data write of batch {batch_tag!r}, "
             "before manifest swap (exactly-once crash-window test)"
-        )
-    # empty micro-batch → [] — still commits the tag below (replay skip)
-    stats = _batch_stats(
-        df, key_col, f"{_data_dir(root, table)}/__batch={batch_tag}"
+        ) if fail_before_swap else None,
     )
-    now = time.time()
-    base_pid = man["version"] * n_partitions
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        man["partitions"].append(
-            {
-                "partition_id": base_pid + r["__pid"],
-                "pid": int(r["__pid"]),
-                "batch": batch_tag,
-                "row_count": r["row_count"],
-                "key_min": r["key_min"],
-                "key_max": r["key_max"],
-                "checksum": r["checksum"],
-                "stage": stage,
-                "committed_at": now,
-            }
-        )
-    if not stats:
-        man["partitions"].append(
-            {
-                "partition_id": base_pid,
-                "pid": 0,
-                "batch": batch_tag,
-                "row_count": 0,
-                "key_min": None,
-                "key_max": None,
-                "checksum": 0,
-                "stage": stage,
-                "committed_at": now,
-            }
-        )
-    man["version"] += 1
-    # a conflicting concurrent commit (e.g. a compaction finishing during
-    # this micro-batch) raises ConcurrentCommitError → the streaming query
-    # fails and its restart REPLAYS the batch: the tag was never committed,
-    # the orphan data dir is GC'd, and the append is attempted again —
-    # exactly-once holds through the conflict
-    try:
-        _swap_manifest(root, table, man, expected_version=prev_version)
-    finally:
-        _clear_inflight(root, table, batch_tag)
-    return man
 
 
 def rewrite_files(
@@ -558,8 +595,9 @@ def rewrite_files(
       * row/checksum identity — the rows are re-bucketed with the SAME
         committed partitioning (hash or the persisted range_bounds), and
         the new per-partition lineage stats come from reading back the
-        compacted files (``_batch_stats``), so the manifest can never
-        disagree with the data;
+        compacted files (``_commit_batch``), so the manifest can never
+        disagree with the data; the read-back must hold exactly the base
+        manifest's row count (row-conservation guard);
       * pinned-reader isolation — older snapshots' batch directories stay
         referenced by their manifest files, which GC now consults
         (``_live_batches``), so ``read_table(as_of=N)`` is untouched until
@@ -605,29 +643,19 @@ def rewrite_files(
             f"files_per_partition must be >= 1, got {files_per_partition}"
         )
     _assert_local_root(root)
-    man = current_manifest(root, table)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
+    man = _resolve_manifest(root, table, None)
     # clear a prior crashed compaction (own prefix "c"); live streaming
     # appends' in-flight dirs stay shielded by their markers
     _gc_orphan_batches(root, table, man, own_prefixes=("c",))
 
     n = man["n_partitions"]
     key_col = man["key_col"]
-    bounds = man.get("range_bounds")
     tag = f"c{man['version'] + 1}-{uuid.uuid4().hex[:8]}"
-    df = read_table(spark, root, table)
-
-    if bounds is not None:
-        pid_expr = F.lit(len(bounds))
-        for i in range(len(bounds) - 1, -1, -1):
-            pid_expr = F.when(
-                F.col(key_col) <= F.lit(bounds[i]), F.lit(i)
-            ).otherwise(pid_expr)
-        pid = pid_expr.cast("int")
-    else:
-        pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
-    staged = df.withColumn("__pid", pid).withColumn("__batch", F.lit(tag))
+    staged = (
+        read_table(spark, root, table)
+        .withColumn("__pid", _pid_column(key_col, n, man["range_bounds"]))
+        .withColumn("__batch", F.lit(tag))
+    )
     if files_per_partition == 1:
         # one shuffle keyed on __pid: each partition's rows land in ONE
         # task, so each pid directory holds exactly one compacted file
@@ -648,74 +676,19 @@ def rewrite_files(
         # two pids in one task, and the leading __pid keeps each output
         # file's rows contiguous AND key-sorted
         staged = staged.sortWithinPartitions("__pid", key_col)
-    _mark_inflight(root, table, tag)
-    staged.write.mode("append").partitionBy("__batch", "__pid").parquet(
-        _data_dir(root, table)
-    )
-    if fail_before_swap:
-        raise RuntimeError(
+    # batch tables track every pid (empty ones too); append tables track
+    # only the pids a batch wrote.  The row figure is the base manifest's:
+    # an Observation on this shuffle+sort plan would perturb the sort.
+    return _commit_batch(
+        man, staged, root, table, tag, stage="compact",
+        required_pids=range(n) if man["writer"] == "batch" else [],
+        replace=True,
+        after_write=_raiser(
             f"injected failure after compacted write of {tag!r}, before "
             "manifest swap (compaction crash-window test)"
-        )
-    if on_before_swap is not None:
-        on_before_swap()  # test hook: a concurrent commit in the CAS window
-    stats = _batch_stats(df, key_col, f"{_data_dir(root, table)}/__batch={tag}")
-    # row conservation: compaction must re-commit EXACTLY the base
-    # manifest's rows.  The stats come from reading back the compacted
-    # files, so any loss — a concurrent GC deleting the in-flight dir, a
-    # partial write, a partitioning bug — surfaces here as a loud abort
-    # instead of a committed manifest that silently shrank the table.
-    base_rows = sum(rec["row_count"] for rec in man["partitions"])
-    compacted_rows = sum(r["row_count"] for r in stats)
-    if compacted_rows != base_rows:
-        _clear_inflight(root, table, tag)
-        raise RuntimeError(
-            f"compaction of {table!r} read back {compacted_rows} rows but "
-            f"the base manifest (v{man['version']}) committed {base_rows}; "
-            "aborting without commit (row-conservation guard)"
-        )
-    by_pid = {int(r["__pid"]): r for r in stats}
-    now = time.time()
-    base_pid = man["version"] * n if _writer_kind(man) == "append" else 0
-    recs = []
-    for p in range(n):
-        r = by_pid.get(p)
-        if r is None and _writer_kind(man) == "append":
-            continue  # append tables don't track empty pids per batch
-        recs.append(
-            {
-                "partition_id": base_pid + p,
-                "pid": p,
-                "batch": tag,
-                "row_count": r["row_count"] if r else 0,
-                "key_min": r["key_min"] if r else None,
-                "key_max": r["key_max"] if r else None,
-                "checksum": r["checksum"] if r else 0,
-                "stage": "compact",
-                "committed_at": now,
-            }
-        )
-    if not recs:  # an entirely-empty committed table still commits the tag
-        recs.append(
-            {
-                "partition_id": base_pid, "pid": 0, "batch": tag,
-                "row_count": 0, "key_min": None, "key_max": None,
-                "checksum": 0, "stage": "compact", "committed_at": now,
-            }
-        )
-    retired = sorted(
-        set(man.get("retired_batches", []))
-        | {rec.get("batch") for rec in man["partitions"] if rec.get("batch")}
+        ) if fail_before_swap else on_before_swap,
+        expected_rows=sum(rec["row_count"] for rec in man["partitions"]),
     )
-    new_man = dict(man)
-    new_man["version"] = man["version"] + 1
-    new_man["partitions"] = recs
-    new_man["retired_batches"] = retired
-    try:
-        _swap_manifest(root, table, new_man, expected_version=man["version"])
-    finally:
-        _clear_inflight(root, table, tag)
-    return new_man
 
 
 def expire_snapshots(
@@ -898,6 +871,41 @@ def manifest_at(root: str, table: str, version: int) -> dict[str, Any]:
         return json.load(f)
 
 
+def _resolve_manifest(root: str, table: str, as_of: int | None) -> dict[str, Any]:
+    """The manifest a reader binds to: the head, or snapshot ``as_of``.
+    Raises FileNotFoundError when there is none."""
+    if as_of is not None:
+        return manifest_at(root, table, as_of)
+    man = current_manifest(root, table)
+    if man is None:
+        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
+    return man
+
+
+def _scan_committed(
+    spark: SparkSession,
+    root: str,
+    table: str,
+    man: dict[str, Any],
+    recs: Iterable[dict[str, Any]],
+) -> DataFrame:
+    """The rows of the committed partitions ``recs`` (records of ``man``),
+    with their ``__batch``/``__pid`` partition columns.  The (batch, raw
+    pid) filter prunes at file-listing time, so orphan and in-flight batch
+    directories — whatever stray files they hold — are never opened.  When
+    no record has data the result is a schema-stable empty frame built
+    from the manifest, without touching the filesystem (an all-empty
+    committed table has a manifest but may have no parquet files at
+    all)."""
+    cond = _committed_batch_pid_filter(recs)
+    if cond is None or not os.path.isdir(_data_dir(root, table)):
+        schema = StructType.fromDDL(man["schema"])
+        return spark.createDataFrame(
+            [], schema.add("__batch", StringType()).add("__pid", IntegerType())
+        )
+    return spark.read.parquet(_data_dir(root, table)).filter(cond)
+
+
 def read_table(
     spark: SparkSession, root: str, table: str, as_of: int | None = None
 ) -> DataFrame:
@@ -918,22 +926,23 @@ def read_table(
     consults every committed snapshot's manifest — not just the head —
     so a batch stays on disk until ``expire_snapshots`` drops the last
     manifest that references it."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
+    man = _resolve_manifest(root, table, as_of)
+    return _scan_committed(spark, root, table, man, man["partitions"]).drop(
+        "__batch", "__pid"
     )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    cond = _committed_batch_pid_filter(man)
-    if cond is None or not os.path.isdir(_data_dir(root, table)):
-        # no committed batches, or every committed batch was empty (an
-        # empty micro-batch commits its tag but writes no files)
-        from pyspark.sql.types import StructType
 
-        return spark.createDataFrame([], StructType.fromDDL(man["schema"]))
-    base = spark.read.parquet(_data_dir(root, table))
-    return base.filter(cond).drop("__batch", "__pid")
+
+def _records_in_range(man: dict[str, Any], lo: int, hi: int) -> list[dict[str, Any]]:
+    """Committed records whose [key_min, key_max] lineage bounds overlap
+    [lo, hi] (empty partitions carry NULL bounds and never match)."""
+    return [
+        rec
+        for rec in man["partitions"]
+        if rec["key_min"] is not None
+        and rec["key_max"] is not None
+        and rec["key_max"] >= lo
+        and rec["key_min"] <= hi
+    ]
 
 
 def partitions_for_range(
@@ -945,15 +954,7 @@ def partitions_for_range(
     bounds and never match).  The pid is the RAW file-partition value, not
     the namespaced lineage ``partition_id`` — appended batches namespace
     the latter (round-4 advice fix)."""
-    n = man["n_partitions"]
-    sel = []
-    for rec in man["partitions"]:
-        kmin, kmax = rec.get("key_min"), rec.get("key_max")
-        if kmin is None or kmax is None:
-            continue
-        if kmax >= lo and kmin <= hi:
-            sel.append((_rec_pid(rec, n), rec["batch"]))
-    return sel
+    return [(rec["pid"], rec["batch"]) for rec in _records_in_range(man, lo, hi)]
 
 
 def read_range(
@@ -975,37 +976,11 @@ def read_range(
 
     ``as_of=<version>`` prunes against snapshot vN's manifest instead
     (same time-travel semantics as ``read_table``)."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    key_col = man["key_col"]
-    sel = partitions_for_range(man, lo, hi)
-    if not sel:
-        # schema-stable empty result straight from the manifest — no
-        # filesystem touch (an all-empty committed table has a manifest
-        # but may have no parquet files at all)
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromDDL(man["schema"]))
-    base = spark.read.parquet(_data_dir(root, table))
-    # per-batch pid sets: files carry RAW __pid, and distinct batches may
-    # reuse the same pid values — the filter must pair them (round-4
-    # advice: a flat isin over namespaced ids dropped appended batches)
-    by_batch: dict[str, set[int]] = {}
-    for p, b in sel:
-        if b:
-            by_batch.setdefault(b, set()).add(p)
-    cond = None
-    for b in sorted(by_batch):
-        c = (F.col("__batch") == b) & F.col("__pid").isin(sorted(by_batch[b]))
-        cond = c if cond is None else (cond | c)
-    key = F.col(key_col).cast("bigint")
+    man = _resolve_manifest(root, table, as_of)
+    key = F.col(man["key_col"]).cast("bigint")
     return (
-        base.filter(cond & (key >= F.lit(int(lo))) & (key <= F.lit(int(hi))))
+        _scan_committed(spark, root, table, man, _records_in_range(man, lo, hi))
+        .filter((key >= F.lit(int(lo))) & (key <= F.lit(int(hi))))
         .drop("__batch", "__pid")
     )
 
@@ -1014,12 +989,14 @@ def lineage(
     spark: SparkSession, root: str, table: str, as_of: int | None = None
 ) -> DataFrame:
     """The lineage/metrics table as a DataFrame (from the manifest; pass
-    ``as_of=<version>`` for the metrics exactly as of that snapshot)."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
+    ``as_of=<version>`` for the metrics exactly as of that snapshot).  A
+    table with no commit yet has an empty lineage."""
+    try:
+        recs = _resolve_manifest(root, table, as_of)["partitions"]
+    except FileNotFoundError:
+        if as_of is not None:
+            raise
+        recs = []
     rows = [
         (
             rec["stage"],
@@ -1030,7 +1007,7 @@ def lineage(
             rec["checksum"],
             rec["committed_at"],
         )
-        for rec in (man["partitions"] if man else [])
+        for rec in recs
     ]
     return spark.createDataFrame(rows, LINEAGE_SCHEMA)
 
@@ -1048,8 +1025,9 @@ def verify_table(
     e.g. after a filesystem migration, a restore from backup, or any
     suspected partial write.  One distributed scan (grouped by the
     (batch, pid) file-partition columns, so stats come from the same
-    files a reader would open); only per-partition stat rows reach the
-    driver.
+    files a reader would open, with the same ``_partition_stats``
+    expression the commit recorded); only per-partition stat rows reach
+    the driver.
 
     Returns ``{"ok": bool, "partitions_checked": int, "mismatches":
     [...]}`` where each mismatch carries the batch, raw pid, kind
@@ -1057,74 +1035,31 @@ def verify_table(
     ``unexpected_rows`` — manifest says empty but files hold rows; or the
     disagreeing field ``row_count``/``key_min``/``key_max``/``checksum``)
     plus the expected and observed values."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    n = man["n_partitions"]
-    expected = {(rec["batch"], _rec_pid(rec, n)): rec for rec in man["partitions"]}
-
-    observed: dict[tuple, Any] = {}
-    cond = _committed_batch_pid_filter(man)
-    if cond is not None and os.path.isdir(_data_dir(root, table)):
-        base = spark.read.parquet(_data_dir(root, table)).filter(cond)
-        # checksum over the DATA columns in file-schema order — the same
-        # expression _batch_stats committed (xxhash64 is column-order
-        # sensitive; __batch/__pid are directory-derived, not data)
-        data_cols = [c for c in base.columns if c not in ("__batch", "__pid")]
-        key = F.col(man["key_col"]).cast("bigint")
-        stats = base.groupBy("__batch", "__pid").agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.min(key).alias("key_min"),
-            F.max(key).alias("key_max"),
-            F.expr("bit_xor(xxhash64(" + ", ".join(data_cols) + "))").alias(
-                "checksum"
-            ),
-        )
-        observed = {
-            (r["__batch"], int(r["__pid"])): r for r in stats.collect()
-        }
+    man = _resolve_manifest(root, table, as_of)
+    expected = {(rec["batch"], rec["pid"]): rec for rec in man["partitions"]}
+    scan = _scan_committed(spark, root, table, man, man["partitions"])
+    observed = {
+        (r["__batch"], int(r["__pid"])): r
+        for r in _partition_stats(scan, man["key_col"], ["__batch", "__pid"])
+    }
 
     mismatches: list[dict[str, Any]] = []
     for (batch, pid), rec in expected.items():
         ob = observed.get((batch, pid))
         if rec["row_count"] == 0:
-            if ob is not None:
-                mismatches.append(
-                    {
-                        "batch": batch,
-                        "pid": pid,
-                        "kind": "unexpected_rows",
-                        "expected": 0,
-                        "observed": ob["row_count"],
-                    }
-                )
-            continue
-        if ob is None:
-            mismatches.append(
-                {
-                    "batch": batch,
-                    "pid": pid,
-                    "kind": "missing_data",
-                    "expected": rec["row_count"],
-                    "observed": 0,
-                }
-            )
-            continue
-        for field in ("row_count", "key_min", "key_max", "checksum"):
-            if ob[field] != rec[field]:
-                mismatches.append(
-                    {
-                        "batch": batch,
-                        "pid": pid,
-                        "kind": field,
-                        "expected": rec[field],
-                        "observed": ob[field],
-                    }
-                )
+            diffs = [] if ob is None else [("unexpected_rows", 0, ob["row_count"])]
+        elif ob is None:
+            diffs = [("missing_data", rec["row_count"], 0)]
+        else:
+            diffs = [
+                (field, rec[field], ob[field])
+                for field in ("row_count", "key_min", "key_max", "checksum")
+                if ob[field] != rec[field]
+            ]
+        mismatches += [
+            {"batch": batch, "pid": pid, "kind": kind, "expected": e, "observed": o}
+            for kind, e, o in diffs
+        ]
     return {
         "ok": not mismatches,
         "partitions_checked": len(expected),

@@ -466,3 +466,57 @@ def test_rewrite_row_conservation_guard(spark, workdir):
     man = ice.rewrite_files(spark, workdir, "t")
     assert _rows(ice.read_table(spark, workdir, "t")) == before
     assert sum(r["row_count"] for r in man["partitions"]) == len(before)
+
+
+@pytest.mark.parametrize("writer", ["write_partitioned", "append_batch"])
+def test_batch_writers_row_conservation_guard(spark, workdir, monkeypatch, writer):
+    """Both batch writers refuse a commit whose read-back lost rows: a
+    batch directory deleted between the data write and the stats read-back
+    (the concurrent-GC / partial-write class) must abort the commit loudly
+    with nothing committed — before, the two batch writers recorded
+    row_count 0 for the lost partitions and silently shrank the table."""
+    df = _src(spark)
+    halves = [df.filter(F.col("doc_id") % 2 == r) for r in (0, 1)]
+
+    def write(i):
+        if writer == "write_partitioned":
+            # batch i commits pids {2i, 2i+1}; a resume picks up the rest
+            return ice.write_partitioned(
+                df, workdir, "t", stage="s1", key_col="key", n_partitions=4,
+                batch_size=2, fail_after_batches=1 if i == 0 else None,
+            )
+        return ice.append_batch(
+            halves[i], workdir, "t", stage="ing", key_col="key",
+            n_partitions=4, batch_tag=f"sb{i}",
+        )
+
+    if writer == "write_partitioned":
+        with pytest.raises(RuntimeError, match="injected failure"):
+            write(0)
+    else:
+        write(0)
+    v = ice._version_pointer(workdir, "t")
+    assert v == 1
+
+    orig = ice._partition_stats
+
+    def racing_gc(frame, key_col, group_cols):
+        live = {r["batch"] for r in ice.current_manifest(workdir, "t")["partitions"]}
+        for d in glob.glob(f"{workdir}/t/data/__batch=*"):
+            if d.split("__batch=")[1] not in live:
+                shutil.rmtree(d)
+        return orig(frame, key_col, group_cols)
+
+    monkeypatch.setattr(ice, "_partition_stats", racing_gc)
+    with pytest.raises(RuntimeError, match="row-conservation"):
+        write(1)
+    monkeypatch.undo()
+    assert ice._version_pointer(workdir, "t") == v
+    assert not os.listdir(os.path.join(workdir, "t", "metadata", "inflight"))
+
+    man = write(1)
+    assert man["version"] == v + 1
+    got = _rows(ice.read_table(spark, workdir, "t"))
+    assert got == _rows(df)
+    assert sum(r["row_count"] for r in man["partitions"]) == len(got)
+    assert ice.verify_table(spark, workdir, "t")["ok"]

@@ -103,3 +103,78 @@ def test_verify_flags_missing_and_duplicated_files(spark, workdir):
         }
     ], rep
     assert rep["mismatches"][0]["expected"] > 0
+
+
+def test_column_name_needing_quotes_round_trips(spark, workdir):
+    """A data column named ``n-chars`` is a name, not an expression: the
+    lineage checksum must quote it in every writer's read-back and in the
+    fsck.  Spliced unquoted into SQL text it failed to resolve after the
+    data write, leaving an orphan batch directory behind."""
+    df = _src(spark).withColumnRenamed("n_chars", "n-chars")
+    want = sorted(tuple(r) for r in df.collect())
+    ice.write_partitioned(
+        df, workdir, "tb", stage="s1", key_col="key", n_partitions=4,
+        batch_size=2,
+    )
+    for i in (0, 1):
+        ice.append_batch(
+            df.filter(F.col("doc_id") % 2 == i), workdir, "ta", stage="ing",
+            key_col="key", n_partitions=4, batch_tag=f"sb{i}",
+        )
+    for t in ("tb", "ta"):
+        assert ice.verify_table(spark, workdir, t)["ok"]
+        ice.rewrite_files(spark, workdir, t)
+        assert ice.verify_table(spark, workdir, t)["ok"]
+        got = ice.read_table(spark, workdir, t)
+        assert "n-chars" in got.columns
+        assert sorted(tuple(r) for r in got.collect()) == want
+    # for ordinary names the quoted checksum is bit-identical to the
+    # expression spliced as SQL text; and column names never enter
+    # xxhash64, so the renamed table committed the same checksums
+    plain = ice.write_partitioned(
+        _src(spark), workdir, "tp", stage="s1", key_col="key",
+        n_partitions=4, batch_size=2,
+    )
+    spliced = {
+        r["__pid"]: r["c"]
+        for r in spark.read.parquet(f"{workdir}/tp/data")
+        .groupBy("__pid")
+        .agg(F.expr("bit_xor(xxhash64(doc_id, lang, n_chars, key))").alias("c"))
+        .collect()
+    }
+    assert {r["pid"]: r["checksum"] for r in plain["partitions"]} == spliced
+    assert [r["checksum"] for r in plain["partitions"]] == [
+        r["checksum"] for r in ice.manifest_at(workdir, "tb", 2)["partitions"]
+    ]
+
+
+def test_stray_files_in_inflight_batch_are_never_scanned(spark, workdir):
+    """A crashed append leaves an in-flight ``__batch=`` directory; stray
+    files landing there — a zero-byte ``*.parquet`` and a complete parquet
+    file of a foreign schema — must not reach the fsck or a reader: both
+    scan only the (batch, pid) pairs the manifest commits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = _src(spark)
+    a = df.filter(F.col("doc_id") % 2 == 0)
+    ice.append_batch(
+        a, workdir, "t", stage="ing", key_col="key", n_partitions=4,
+        batch_tag="sb0",
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ice.append_batch(
+            df.filter(F.col("doc_id") % 2 == 1), workdir, "t", stage="ing",
+            key_col="key", n_partitions=4, batch_tag="sb1",
+            fail_before_swap=True,
+        )
+    pid_dir = sorted(glob.glob(f"{workdir}/t/data/__batch=sb1/__pid=*"))[0]
+    open(os.path.join(pid_dir, "part-zero.parquet"), "wb").close()
+    pq.write_table(
+        pa.table({"foreign": ["x", "y"], "other": [1.5, 2.5]}),
+        os.path.join(pid_dir, "part-foreign.parquet"),
+    )
+    rep = ice.verify_table(spark, workdir, "t")
+    assert rep["ok"], rep
+    got = sorted(tuple(r) for r in ice.read_table(spark, workdir, "t").collect())
+    assert got == sorted(tuple(r) for r in a.collect())

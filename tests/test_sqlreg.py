@@ -245,3 +245,38 @@ def test_sql_inlined_family_has_zero_python_in_plan(sql_spark):
     plan = buf.getvalue()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "pythonUDF" not in plan and "PythonUDF" not in plan
+
+
+def test_s2_token_level_null_argument_is_null(sql_spark):
+    """SQL NULL semantics for gs_s2_token / gs_s2_level: a NULL cell yields
+    NULL, and the real gs_s2_cell ids sharing its Arrow batch keep their
+    exact 64-bit values (a pandas UDF saw that batch as float64, rounded
+    every id and returned wrong tokens and levels for the valid rows)."""
+    spark = sql_spark
+    pts = [
+        (0, 48.85, 2.29, 30),
+        (1, None, 2.29, 30),
+        (2, -33.9, 151.2, 30),
+        (3, 40.7, -74.0, 12),
+        (4, 64.1, -21.9, 17),
+    ]
+    df = spark.createDataFrame(
+        pts, "id int, lat double, lon double, lvl int"
+    ).coalesce(1)
+    cells = df.select("id", F.expr("gs_s2_cell(lat, lon, lvl)").alias("cell"))
+    got = {
+        r["id"]: (r["cell"], r["t"], r["l"])
+        for r in cells.select(
+            "id",
+            "cell",
+            F.expr("gs_s2_token(cell)").alias("t"),
+            F.expr("gs_s2_level(cell)").alias("l"),
+        ).collect()
+    }
+    want = {1: (None, None, None)}
+    for i, lat, lon, lvl in pts:
+        if lat is not None:
+            c = int(s2k.latlng_to_cell(np.array([lat]), np.array([lon]), lvl)[0])
+            want[i] = (c, str(s2k.to_token(np.array([c]))[0]), lvl)
+    assert got == want
+    assert any(c < 0 for c, _, _ in want.values() if c is not None)
