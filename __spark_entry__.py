@@ -415,8 +415,8 @@ def _q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_map_match_cellring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3 scale path: the SAME trace snapped through the cell-ring kNN
-    equi-join (knn.knn_join_cellring, k=1) — must agree exactly with
+    """O3 scale path: the SAME trace snapped through the exact cell-ring
+    kNN (knn.knn_join_cellring_adaptive, k=1) — must agree exactly with
     `map_match` and shares its oracle (round-2 review item 3: nothing
     proved the cell-ring snap agrees with the exact snap)."""
     routes = _q_polyline_routes(spark, sf_dir)
@@ -744,8 +744,8 @@ def _q_tile_to_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N7 batch twin of streaming.windowed_counts: tumbling 1-hour windows
-    over events (epoch-second starts, exact-cent sums → float-free)."""
+    """N7 tumbling 1-hour windows over events (epoch-second starts,
+    exact-cent sums → float-free)."""
     ev = src.read_split(spark, f"{sf_dir}/events.parquet")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
     return (
@@ -1058,8 +1058,9 @@ def _q_contamination(spark, sf_dir):
 
 def _q_media_features(spark, sf_dir):
     """P1 multimodal featureize (mapInPandas over binary payloads) + the
-    frame-sampling plan in one relation (r2's frame_samples folded in as a
-    per-video frame_idx explode; image/audio rows carry NULL frame_idx)."""
+    frame-sampling plan in one relation (r2's frame-sampling query folded
+    in as a per-video frame_idx explode; image/audio rows carry NULL
+    frame_idx)."""
     feats = med.extract_features(med.media_table(spark, sf_dir))
     return med.frame_features(feats)
 
@@ -1069,7 +1070,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     driver checks the first 50 in registry order (round-2 review item 1:
     r2's 53-entry registry left 3 queries outside the check window; r3
     merges near-duplicates — tiles z8+z12, the two compact round-trips,
-    s2_cells→s2_tiles, frame_samples→media_features, corpus_split→
+    s2_cells→s2_tiles, frame sampling→media_features, corpus_split→
     corpus_curate — and upgrades the two cluster queries from rows-only to
     recursive-CTE oracles so nothing is unchecked).  Round 5 merges the
     two plan-variant twin pairs (pip_join_salted+pip_join_planned→

@@ -52,21 +52,10 @@ from ..geo import geohash as gh
 from ..geo import s2 as s2k
 from . import udfs as U
 
-# the five magic-mask interleave steps of geo.geohash._part1by1 /
-# udfs._morton_spread_col, as (shift, mask) pairs
-_MORTON_STEPS = (
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-)
-
-
 def _morton_spread_sql(x: str) -> str:
     """Inline SQL twin of udfs._morton_spread_col (bit k → bit 2k)."""
     body = x
-    for sh, mask in _MORTON_STEPS:
+    for sh, mask in U.MORTON_STEPS:
         body = f"(({body} | shiftleft({body}, {sh})) & CAST({mask} AS BIGINT))"
     return body
 

@@ -44,16 +44,23 @@ def geohash_encode_udf(precision: int):
     return _enc
 
 
+# the five magic-mask interleave steps of geo.geohash._part1by1, as
+# (shift, mask) pairs — shared by both Spark twins (this column form and
+# sqlreg's inline SQL form); the numpy literal stays separate as the
+# reference both are property-tested against
+MORTON_STEPS = (
+    (16, 0x0000FFFF0000FFFF),
+    (8, 0x00FF00FF00FF00FF),
+    (4, 0x0F0F0F0F0F0F0F0F),
+    (2, 0x3333333333333333),
+    (1, 0x5555555555555555),
+)
+
+
 def _morton_spread_col(x: Column) -> Column:
     """Spread the low 32 bits of a BIGINT column so bit k moves to bit 2k
     (JVM twin of geo.geohash._part1by1 — same magic-mask sequence)."""
-    for sh, mask in (
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ):
+    for sh, mask in MORTON_STEPS:
         x = (x.bitwiseOR(F.shiftleft(x, sh))).bitwiseAND(F.lit(mask))
     return x
 

@@ -26,9 +26,6 @@ _B32 = np.frombuffer(b"0123456789bcdefghjkmnpqrstuvwxyz", dtype=np.uint8)
 _B32_INV = np.full(256, 255, dtype=np.uint8)
 _B32_INV[_B32] = np.arange(32, dtype=np.uint8)
 
-MAX_PRECISION = 12  # 60 bits total — fits int64
-
-
 def _part1by1(x: np.ndarray) -> np.ndarray:
     """Spread the low 32 bits of x so bit k moves to bit 2k (Morton)."""
     x = x.astype(np.uint64)
@@ -143,29 +140,3 @@ def encode_from_int(lon_q: np.ndarray, lat_q: np.ndarray, precision: int) -> np.
     shifts = np.arange(precision - 1, -1, -1, dtype=np.uint64) * np.uint64(5)
     idx = (code[:, None] >> shifts[None, :]) & np.uint64(31)
     return _B32[idx.astype(np.int64)].view(f"S{precision}").reshape(n).astype(str)
-
-
-def neighbors_ring(cells, precision: int, ring: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance `ring` on the geohash grid
-    (incl. the center cell) — the k-ring used by kNN expansion (SURVEY §2.6
-    N2).  Longitude wraps; latitude clamps at the poles.
-
-    Returns shape (n, (2*ring+1)**2) array of strings.
-    """
-    lon_bits, lat_bits = _bits(precision)
-    lon_q, lat_q = decode_int(np.atleast_1d(cells), precision)
-    offs = np.arange(-ring, ring + 1, dtype=np.int64)
-    dlon, dlat = np.meshgrid(offs, offs, indexing="ij")
-    dlon = dlon.ravel()[None, :]
-    dlat = dlat.ravel()[None, :]
-    nlon = (lon_q.astype(np.int64)[:, None] + dlon) % (1 << lon_bits)
-    nlat = np.clip(lat_q.astype(np.int64)[:, None] + dlat, 0, (1 << lat_bits) - 1)
-    flat_lon = nlon.ravel().astype(np.uint64)
-    flat_lat = nlat.ravel().astype(np.uint64)
-    out = encode_from_int(flat_lon, flat_lat, precision)
-    return out.reshape(nlon.shape)
-
-
-def cell_parent(cells: np.ndarray, parent_precision: int) -> np.ndarray:
-    """Geohash parent = string prefix (gindex.py:379-381 semantics)."""
-    return np.asarray(cells, dtype=f"U{parent_precision}").astype(str)

@@ -41,16 +41,3 @@ def tile_bounds(x, y, z: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.nd
     north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * y / n))))
     south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (y + 1) / n))))
     return west, south, east, north
-
-
-def tile_quadkey(x, y, z: int) -> np.ndarray:
-    """Bing-style quadkey (bit-interleave of x/y, one base-4 digit per zoom
-    level) — a Hilbert-free space-filling key useful for range partitioning."""
-    x = np.asarray(x, dtype=np.uint64)
-    y = np.asarray(y, dtype=np.uint64)
-    out = np.zeros(x.shape, dtype=np.uint64)
-    for level in range(z, 0, -1):
-        bit = np.uint64(level - 1)
-        digit = ((x >> bit) & np.uint64(1)) | (((y >> bit) & np.uint64(1)) << np.uint64(1))
-        out = (out << np.uint64(2)) | digit
-    return out.astype(np.int64)

@@ -20,6 +20,7 @@ Layout::
                                            written by a live, uncommitted job
     {root}/{table}/metadata/.commit.lock
                                         -- flock serializing the manifest CAS
+                                           and the orphan GC
 
 Batch tags: ``b<V>-<uuid>`` (write_partitioned), the caller's ``batch_tag``
 (append_batch), ``c<V>-<uuid>`` (rewrite_files).
@@ -52,12 +53,13 @@ order-insensitive ``bit_xor(xxhash64(...))`` so it is shuffle-free to verify.
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
 import json
 import os
 import time
 import uuid
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -146,10 +148,30 @@ class ConcurrentCommitError(RuntimeError):
     writer GCs, and the caller retries from the fresh manifest."""
 
 
+@contextlib.contextmanager
+def _commit_lock(root: str, table: str) -> Iterator[None]:
+    """Hold the table's exclusive flock on ``metadata/.commit.lock`` (the
+    root is asserted local, where flock is reliable).  The manifest swap
+    and the orphan GC both run under it, so a GC can never delete a batch
+    directory between a commit's directory check and its swap.  Not
+    reentrant — its holders never nest (a second flock on a fresh file
+    description would deadlock the process against itself)."""
+    md = _meta_dir(root, table)
+    os.makedirs(md, exist_ok=True)
+    with open(os.path.join(md, ".commit.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            yield
+        finally:
+            fcntl.flock(lock, fcntl.LOCK_UN)
+
+
 def _swap_manifest(
-    root: str, table: str, manifest: dict[str, Any], *, expected_version: int | None
+    root: str, table: str, manifest: dict[str, Any], *,
+    expected_version: int | None, batch_dir: str | None = None,
 ) -> None:
-    """Commit ``manifest`` iff the table is still at ``expected_version``.
+    """Commit ``manifest`` iff the table is still at ``expected_version``
+    and, when ``batch_dir`` is given, that directory still exists.
 
     Optimistic concurrency (Iceberg's commit CAS): every writer computes
     its new snapshot from a base manifest; if the VERSION pointer moved in
@@ -157,36 +179,41 @@ def _swap_manifest(
     minutes-long ``rewrite_files`` job — an unconditional swap would
     overwrite the concurrent snapshot and its rows would silently vanish
     from reads (a lost update violating the exactly-once sink's no-loss
-    contract).  The check-and-swap runs under an exclusive flock on
-    ``metadata/.commit.lock`` (the root is asserted local, where flock is
-    reliable), so the window is closed, not merely shrunk.  On conflict
-    the commit raises ``ConcurrentCommitError`` and the already-written
-    batch directory stays an orphan for the next writer's GC.
+    contract).  The check-and-swap runs under ``_commit_lock``, so the
+    window is closed, not merely shrunk.  On conflict the commit raises
+    ``ConcurrentCommitError`` and the already-written batch directory
+    stays an orphan for the next writer's GC.
+
+    ``batch_dir`` is the directory whose read-back rows the manifest
+    commits: an orphan GC (which runs under the same lock) that removed it
+    after the read-back would otherwise leave a manifest pointing at rows
+    that are gone, so the swap refuses with a ``RuntimeError``.
     """
     md = _meta_dir(root, table)
-    os.makedirs(md, exist_ok=True)
-    with open(os.path.join(md, ".commit.lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            cur = _version_pointer(root, table)
-            if cur != expected_version:
-                raise ConcurrentCommitError(
-                    f"table {table!r}: commit based on version "
-                    f"{expected_version} but the table is now at {cur} — "
-                    "a concurrent writer committed; retry from the fresh "
-                    "manifest"
-                )
-            v = manifest["version"]
-            tmp = os.path.join(md, f".v{v}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.rename(tmp, os.path.join(md, f"v{v}.json"))
-            tmpv = os.path.join(md, ".VERSION.tmp")
-            with open(tmpv, "w") as f:
-                f.write(str(v))
-            os.rename(tmpv, os.path.join(md, "VERSION"))  # atomic pointer swap
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with _commit_lock(root, table):
+        if batch_dir is not None and not os.path.isdir(batch_dir):
+            raise RuntimeError(
+                f"table {table!r}: batch directory {batch_dir!r} was removed "
+                "after its rows were read back; aborting without commit "
+                "(row-conservation guard)"
+            )
+        cur = _version_pointer(root, table)
+        if cur != expected_version:
+            raise ConcurrentCommitError(
+                f"table {table!r}: commit based on version "
+                f"{expected_version} but the table is now at {cur} — "
+                "a concurrent writer committed; retry from the fresh "
+                "manifest"
+            )
+        v = manifest["version"]
+        tmp = os.path.join(md, f".v{v}.json.tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.rename(tmp, os.path.join(md, f"v{v}.json"))
+        tmpv = os.path.join(md, ".VERSION.tmp")
+        with open(tmpv, "w") as f:
+            f.write(str(v))
+        os.rename(tmpv, os.path.join(md, "VERSION"))  # atomic pointer swap
 
 
 def _pid_column(key_col: str, n: int, range_bounds: list[int] | None) -> Column:
@@ -330,7 +357,8 @@ def _commit_batch(
        is still committed and a replay skips it), appended to — or with
        ``replace``, replacing — the manifest's records; a replace retires
        every batch tag it compacts away;
-    6. CAS-swap the manifest against ``man``'s version, then clear the
+    6. CAS-swap the manifest against ``man``'s version — refused if a GC
+       removed the batch directory after the read-back — then clear the
        in-flight marker whether the commit won, lost or was refused.
 
     A crash in steps 1-3 keeps the marker, like a killed job would: the
@@ -396,7 +424,10 @@ def _commit_batch(
         else:
             new["partitions"] = man["partitions"] + recs
         # a fresh table's unsaved manifest is v0; committed ones are >= v1
-        _swap_manifest(root, table, new, expected_version=man["version"] or None)
+        _swap_manifest(
+            root, table, new, expected_version=man["version"] or None,
+            batch_dir=batch_dir if read_back else None,
+        )
     finally:
         _clear_inflight(root, table, tag)
     return new
@@ -745,7 +776,8 @@ def _live_batches(root: str, table: str, man: dict[str, Any]) -> set[str]:
 #: TTL the orphan is reclaimable by anyone (Iceberg's remove_orphan_files
 #: has the same age-threshold design for the same reason).  A job that
 #: legitimately outlives the TTL loses only its own uncommitted attempt —
-#: and loses LOUDLY (the CAS/row-conservation guards), never silently.
+#: and loses LOUDLY (the row-conservation read-back, or the swap's
+#: directory check when the GC lands after the read-back), never silently.
 GC_INFLIGHT_TTL_S = 6 * 3600.0
 
 
@@ -795,29 +827,35 @@ def _gc_orphan_batches(
     serialized by the commit CAS, so reclaiming a same-family dir can only
     strand a job that would lose the CAS anyway — loudly, not silently) or
     (b) the marker is older than ``GC_INFLIGHT_TTL_S`` (a long-dead
-    writer)."""
+    writer).
+
+    Computing ``live`` and every removal run under ``_commit_lock``, so
+    GC never interleaves with a manifest swap: a batch committed before
+    the pass is live, and one removed before its commit's swap is refused
+    by the swap's directory check."""
     import shutil
 
     dd = _data_dir(root, table)
     if not os.path.isdir(dd):
         return
-    live = _live_batches(root, table, man)
-    now = time.time()
-    for name in os.listdir(dd):
-        if not name.startswith("__batch="):
-            continue
-        tag = name.split("=", 1)[1]
-        if tag in live:
-            continue
-        marker = os.path.join(_inflight_dir(root, table), tag)
-        if not any(tag.startswith(p) for p in own_prefixes):
-            try:
-                if now - os.path.getmtime(marker) < GC_INFLIGHT_TTL_S:
-                    continue  # a live concurrent writer's in-flight batch
-            except FileNotFoundError:
-                pass  # unmarked orphan — pre-marker era or already cleared
-        shutil.rmtree(os.path.join(dd, name), ignore_errors=True)
-        _clear_inflight(root, table, tag)
+    with _commit_lock(root, table):
+        live = _live_batches(root, table, man)
+        now = time.time()
+        for name in os.listdir(dd):
+            if not name.startswith("__batch="):
+                continue
+            tag = name.split("=", 1)[1]
+            if tag in live:
+                continue
+            marker = os.path.join(_inflight_dir(root, table), tag)
+            if not any(tag.startswith(p) for p in own_prefixes):
+                try:
+                    if now - os.path.getmtime(marker) < GC_INFLIGHT_TTL_S:
+                        continue  # a live concurrent writer's in-flight batch
+                except FileNotFoundError:
+                    pass  # unmarked orphan — pre-marker era or already cleared
+            shutil.rmtree(os.path.join(dd, name), ignore_errors=True)
+            _clear_inflight(root, table, tag)
 
 
 def snapshots(root: str, table: str) -> list[int]:

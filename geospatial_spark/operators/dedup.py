@@ -231,7 +231,7 @@ def lsh_star_edges(sigs: DataFrame) -> DataFrame:
     """Scale-safe candidate EDGES for clustering: each bucket member links
     to the bucket-minimum id — O(m) edges per bucket instead of O(m²) pairs,
     with identical connected components over the candidate graph (a star is
-    spanning).  Feed through jaccard_verify + dedup_clusters."""
+    spanning).  Feed through jaccard_verify_sets + dedup_clusters."""
     from pyspark.sql import Window
 
     bands = _minhash_bands(sigs)
@@ -247,20 +247,8 @@ def lsh_star_edges(sigs: DataFrame) -> DataFrame:
 def jaccard_verify_sets(
     cand: DataFrame, sets: DataFrame, threshold_ppm: int = 700_000
 ) -> DataFrame:
-    """jaccard_verify taking the array-form shingle relation
-    (``shingle_sets`` output) directly — no extra aggregation."""
-    arrs = sets.select(
-        "id",
-        F.sort_array("hs").alias("arr"),
-        F.size("hs").cast("bigint").alias("n"),
-    )
-    return _jaccard_join(cand, arrs, threshold_ppm)
-
-
-def jaccard_verify(
-    cand: DataFrame, sh: DataFrame, threshold_ppm: int = 700_000
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs; keeps >= threshold.
+    """Exact shingle-set Jaccard for candidate pairs over the array-form
+    shingle relation (``shingle_sets`` output); keeps >= threshold.
 
     jac_ppm = floor(1e6 * |A∩B| / |A∪B|) — exact-int inputs, IEEE double
     division, identical in both engines.
@@ -270,9 +258,10 @@ def jaccard_verify(
     of exploding pairs × shingles (which multiplies the pair table by the
     shingle count before re-aggregating).  The DuckDB oracle keeps the
     explode formulation; same values, different plan."""
-    arrs = sh.groupBy("id").agg(
-        F.sort_array(F.collect_list("h")).alias("arr"),
-        F.count(F.lit(1)).alias("n"),
+    arrs = sets.select(
+        "id",
+        F.sort_array("hs").alias("arr"),
+        F.size("hs").cast("bigint").alias("n"),
     )
     return _jaccard_join(cand, arrs, threshold_ppm)
 

@@ -67,34 +67,6 @@ def registrable_domain_col(host: Column) -> Column:
     return F.when(is_ip | (n <= 2), host).otherwise(joined)
 
 
-def domain_stats(
-    df: DataFrame, url_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    """Per-registrable-domain concentration report: doc count, character
-    mass, distinct languages (when a ``lang`` column exists), and each
-    domain's exact ppm share of the corpus — the over-representation
-    signal a curation pass caps against.  One keyed partial-agg shuffle
-    plus a broadcast of the single global-total row."""
-    dom = registrable_domain_col(url_host_col(F.col(url_col))).alias("domain")
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length(F.col(text_col))).cast("bigint").alias("n_chars"),
-    ]
-    if "lang" in df.columns:
-        aggs.append(F.countDistinct("lang").alias("n_langs"))
-    per = df.select(dom, *[c for c in (text_col, "lang") if c in df.columns])
-    per = per.groupBy("domain").agg(*aggs)
-    total = per.agg(F.sum("n_docs").alias("__total"))
-    return (
-        per.crossJoin(F.broadcast(total))
-        .withColumn(
-            "share_ppm",
-            F.floor(F.lit(1e6) * F.col("n_docs") / F.col("__total")).cast("bigint"),
-        )
-        .drop("__total")
-    )
-
-
 def domain_cap(
     df: DataFrame,
     cap: int,

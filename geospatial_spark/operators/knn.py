@@ -2,16 +2,20 @@
 force for small neighbor sets.
 
 The reference has no kNN; the north star names "kNN via cell-ring
-expansion".  Two physical strategies (plans.planner picks):
+expansion".  Two physical strategies:
 
-* ``broadcast`` — neighbor side tiny (e.g. a gazetteer): ship the neighbor
-  arrays in a vectorized pandas-UDF closure, compute the haversine matrix
-  per Arrow batch, top-k by argpartition.  Exact, zero shuffle.
-* ``cellring`` — large-large: key both sides by geohash cell at a chosen
-  precision, candidate = neighbors in the query's k-ring (ring radius grows
-  until enough candidates), exact haversine re-rank with a window
-  ``row_number() <= k``.  The ring join is a hash equi-join on cell after
-  exploding the query side's ring cells.
+* ``knn_join_broadcast`` — neighbor side tiny (e.g. a gazetteer): ship the
+  neighbor arrays in a vectorized pandas-UDF closure, compute the
+  haversine matrix per Arrow batch, top-k by argpartition.  Exact, zero
+  shuffle.
+* ``knn_join_cellring_adaptive`` — large-large: key both sides by geohash
+  cell at a chosen precision (``plans.planner.choose_knn_params`` derives
+  it and the first ring from the neighbor count), join each point to the
+  neighbors in its Chebyshev cell ring, exact haversine re-rank with a
+  window ``row_number() <= k``; points whose k-th candidate is not
+  provably nearest escalate to the next ring, and the rest fall back to
+  an exact broadcast rank.  The ring join is a hash equi-join on cell
+  after exploding the query side's ring cells (``_ring_join``).
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
 from ..functions import udfs
 from ..geo import distance as dist
@@ -95,54 +99,6 @@ def knn_join_broadcast(
     )
 
 
-def knn_join_cellring_planned(
-    points_df: DataFrame,
-    neighbors_df: DataFrame,
-    k: int = 5,
-    lat: str = "lat",
-    lon: str = "lon",
-    n_lat: str = "lat",
-    n_lon: str = "lon",
-    name: str = "name",
-) -> DataFrame:
-    """Cell-ring kNN with (precision, initial ring) chosen by the planner
-    from the neighbor-set density (plans.planner.choose_knn_params: coarse
-    enough that the expected ring population covers ≥ 4k candidates, fine
-    enough to bound the candidate join).  One count on the neighbor side;
-    the driver's `knn_cellring` query pins (p2, ring 3) for oracle
-    stability — this wrapper is the production entry point where the
-    neighbor table is data, not a fixture.
-
-    Since round 4 this routes through the ADAPTIVE escalation
-    (``knn_join_cellring_adaptive``): the planner's ring sizes the CHEAP
-    first round for average density, points in sparse regions escalate to
-    a 3×-wider ring, and the provably-hard tail gets the exact broadcast
-    fallback — output is exact global kNN at any density skew (the old
-    fixed-ring routing silently returned fewer than k rows around e.g. an
-    Australian point over a Europe-heavy neighbor table)."""
-    from ..plans import planner
-
-    n = neighbors_df.count()
-    precision, max_ring = planner.choose_knn_params(n, k)
-    # the count is already paid — use it to pick the join side strategy:
-    # a small neighbor relation broadcasts (an ExistingRDD-backed one has
-    # no size stats and would otherwise SortMergeJoin, shuffling the
-    # exploded probe relation); a large one keeps the keyed shuffle
-    return knn_join_cellring_adaptive(
-        points_df,
-        neighbors_df,
-        k=k,
-        precision=precision,
-        rings=(max_ring, 3 * max_ring + 1),
-        lat=lat,
-        lon=lon,
-        n_lat=n_lat,
-        n_lon=n_lon,
-        name=name,
-        broadcast_neighbors=n <= 200_000,
-    )
-
-
 def knn_join_cellring_adaptive(
     points_df: DataFrame,
     neighbors_df: DataFrame,
@@ -161,8 +117,8 @@ def knn_join_cellring_adaptive(
     wasteful in dense areas or incomplete in sparse ones at 100× skew).
 
     Round r joins the still-unsatisfied points against neighbors within
-    Chebyshev ring ``rings[r]`` on the geohash integer grid (same pure-JVM
-    machinery as ``knn_join_cellring``), ranks by exact haversine, and
+    Chebyshev ring ``rings[r]`` on the geohash integer grid (the pure-JVM
+    ``_ring_join``), ranks by exact haversine, and
     KEEPS a point iff its k-th candidate provably beats every neighbor
     outside the ring: ``kth_dist < g(ring, lat)`` where the guarantee
     radius is the conservative lower bound on the distance from the point
@@ -326,11 +282,12 @@ def _ring_join(
     lon: str,
     broadcast_nb: bool = False,
 ) -> DataFrame:
-    """Grid-quantized Chebyshev-ring candidate join (the shared pure-JVM
-    core of the fixed-ring and adaptive kNN paths): explode each point to
-    its (2·ring+1)² ring cells on the geohash integer grid (lon wrap via
-    pmod, lat cut at the poles), equi-join on the BIGINT grid id.  ``nb``
-    must carry (neighbor_name, __nlat, __nlon).
+    """Grid-quantized Chebyshev-ring candidate join (the pure-JVM core of
+    every adaptive kNN round): explode each point to its (2·ring+1)² ring
+    cells on the geohash integer grid (lon wrap via pmod, lat cut at the
+    poles), equi-join on the BIGINT grid id.  ``nb`` must carry
+    (neighbor_name, __nlat, __nlon); the caller has already checked that
+    the ring does not span the longitude grid.
 
     ``broadcast_nb``: hint the neighbor side broadcast.  This matters
     because a ``createDataFrame``-backed neighbor relation is an
@@ -344,8 +301,6 @@ def _ring_join(
 
     lon_bits, lat_bits = gh._bits(precision)
     NI, NJ = 1 << lon_bits, 1 << lat_bits
-    if NI <= 2 * max_ring + 1:
-        raise ValueError("ring wider than the longitude grid: raise precision")
 
     def _q(col, off: float, span: float, n: int):
         return F.least(
@@ -381,64 +336,3 @@ def _ring_join(
     if broadcast_nb:
         nbp = F.broadcast(nbp)
     return pts.join(nbp, "__probe", "inner").drop("__probe")
-
-
-def knn_join_cellring(
-    points_df: DataFrame,
-    neighbors_df: DataFrame,
-    k: int = 5,
-    precision: int = 2,
-    max_ring: int = 3,
-    lat: str = "lat",
-    lon: str = "lon",
-    n_lat: str = "lat",
-    n_lon: str = "lon",
-    name: str = "name",
-    broadcast_neighbors: bool = False,
-) -> DataFrame:
-    """Large-large kNN: ring expansion at geohash `precision`.
-
-    NOTE: exact only when the k-th neighbor lies within the ring radius; we
-    take the max ring for all points (rings 0..max_ring unioned via one
-    exploded ring set), then window-rank.  Points whose k-th neighbor is
-    farther than max_ring cells return fewer/approximate rows — callers pick
-    precision/max_ring from neighbor density (plans.planner).
-
-    Everything up to the exact haversine re-rank is pure JVM column math
-    (round 3): both sides quantize to the geohash integer grid
-    (floor-quantize identical to geo.geohash.quantize), the ring is an
-    explode over the literal (di, dj) offset array with longitude wrap
-    (pmod) and latitude cut at the poles, and the equi-join keys on the
-    BIGINT grid id qx*NJ+qy — zero Python crossings, 8-byte join keys
-    (shared core: ``_ring_join``).  Ring membership is exactly the
-    kernel's neighbors_ring set (Chebyshev ≤ max_ring, lon circular
-    NI>2·ring+1, lat rows outside [0, NJ) dropped — the kernel clamps
-    instead, which can only re-emit cells already in the ring, so the
-    joined PAIR set is identical and duplicate-free).
-
-    For EXACT global kNN regardless of density, use
-    ``knn_join_cellring_adaptive``.
-    """
-    nb = neighbors_df.select(
-        F.col(name).alias("neighbor_name"),
-        F.col(n_lat).alias("__nlat"),
-        F.col(n_lon).alias("__nlon"),
-    )
-    cand = _ring_join(
-        points_df, nb, precision, max_ring, lat, lon,
-        broadcast_nb=broadcast_neighbors,
-    )
-    # a neighbor can match via several ring cells? no — each neighbor has ONE
-    # cell; the query's ring contains each cell once → no duplicate pairs.
-    cand = cand.withColumn(
-        "dist_m",
-        udfs.haversine_col(F.col(lat), F.col(lon), F.col("__nlat"), F.col("__nlon")),
-    )
-    w = Window.partitionBy(*[F.col(c) for c in points_df.columns]).orderBy(
-        F.col("dist_m").asc(), F.col("neighbor_name").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*points_df.columns, "neighbor_name", "rank", "dist_m")
-    )

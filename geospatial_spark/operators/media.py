@@ -5,10 +5,8 @@ extraction runs as an Arrow-batched ``mapInPandas`` pipeline (the real shape
 a 100 TB multimodal pipeline needs: binary columns stream through Arrow in
 bounded batches, no driver collect, schema fixed up front).
 
-The actual codec step is STUBBED — image/audio libs are not in this
-environment — behind ``decode_image``/``decode_audio`` which raise
-``NotImplementedError`` unless PIL/soundfile import.  The deterministic
-fallback featureizer (byte length + md5-derived ints + frame-sampling
+There is no codec step: image/audio libs are not in this environment, so
+a deterministic featureizer (byte length + md5-derived ints + frame-sampling
 arithmetic) keeps the Spark-side plumbing real and oracle-checkable: the
 DuckDB oracle recomputes the same features from the payload string
 (sources.oracle_text.media_features_sql).
@@ -29,23 +27,6 @@ FEATURE_SCHEMA = (
     "media_id bigint, kind string, byte_len bigint, n_frames bigint, "
     "f0 bigint, f1 bigint, f2 bigint, f3 bigint"
 )
-
-
-def decode_image(payload: bytes):
-    """Real image decode — unavailable in this environment (STUB)."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "image codecs not installed; media features use the deterministic "
-            "fallback featureizer"
-        ) from exc
-    raise NotImplementedError("wire PIL decode here when available")
-
-
-def decode_audio(payload: bytes):
-    """Real audio decode — unavailable in this environment (STUB)."""
-    raise NotImplementedError("audio codecs not installed")
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,16 +95,4 @@ def frame_features(features_df: DataFrame, every: int = 16) -> DataFrame:
     return features_df.select(
         "media_id", "kind", "byte_len", "n_frames", "f0", "f1", "f2", "f3",
         F.explode(idx).alias("frame_idx"),
-    )
-
-
-def frame_samples(features_df: DataFrame, every: int = 16) -> DataFrame:
-    """Video frame sampling plan: explode sampled frame indices (0, every,
-    2*every, …) for video rows — pure JVM sequence/explode."""
-    vids = features_df.filter(F.col("kind") == "video")
-    idx = F.sequence(
-        F.lit(0), F.col("n_frames") - 1, F.lit(every)
-    )
-    return vids.select(
-        "media_id", F.explode(idx).alias("frame_idx")
     )

@@ -66,10 +66,9 @@ def refine_candidates(
     cand: DataFrame, lon: str, lat: str, out_cols: list, poly_id: str
 ) -> DataFrame:
     """Exact even-odd PIP refine over (point, cell-matched polygon WKB)
-    candidate rows + output projection — the shared tail of every
-    WKB-riding join path (pip_join shuffle/degenerate branches and
-    colocate.pip_join_bucketed are contractually row-identical; keeping
-    the refine in one place keeps them so)."""
+    candidate rows + output projection — the shared tail of pip_join's
+    WKB-riding branches (shuffle and degenerate are contractually
+    row-identical; keeping the refine in one place keeps them so)."""
     refine = udfs.pip_refine_wkb_udf()
     refined = cand.filter(refine(F.col("__geom"), F.col(lon), F.col(lat)))
     return refined.select(*[F.col(c) for c in out_cols], F.col(poly_id))

@@ -146,16 +146,19 @@ def map_match_cellring(
     broadcast_nodes: bool = False,
 ) -> DataFrame:
     """O3 at scale: the SAME snap semantics as ``map_match_snap`` routed
-    through the cell-ring kNN equi-join (``knn.knn_join_cellring``, k=1) —
-    no cross join, one shuffle keyed by probe cell.  Registered as a driver
-    query that must agree exactly with the broadcast snap AND its oracle
-    (round-2 review: the scale path was never exercised *as map matching*).
+    through the exact cell-ring kNN (``knn.knn_join_cellring_adaptive``,
+    k=1, one ring of ``max_ring`` cells) — no cross join, one shuffle keyed
+    by probe cell.  Registered as a driver query that must agree exactly
+    with the broadcast snap AND its oracle (round-2 review: the scale path
+    was never exercised *as map matching*).
 
     Node identity rides as a zero-padded sortable key so the cell-ring
     tie-break (dist, key) equals the exact path's (dist, way_id, node_seq).
-    Exactness holds whenever the nearest node lies within ``max_ring`` cells
-    — guaranteed for traces decoded from the ways' own geometry (snap
-    distance ≈ e6 quantization, ≪ one precision-2 cell)."""
+    A trace point whose nearest node is not provably inside the ring falls
+    through to the adaptive path's exact broadcast tail, so the snap is
+    exact at any ring; traces decoded from the ways' own geometry (snap
+    distance ≈ e6 quantization, ≪ one precision-2 cell) all resolve in the
+    ring."""
     from . import knn as knn_ops
 
     nodes = ways_nodes_df.select(
@@ -167,8 +170,8 @@ def map_match_cellring(
         F.col("lat"),
         F.col("lon"),
     )
-    out = knn_ops.knn_join_cellring(
-        trace_df, nodes, k=1, precision=precision, max_ring=max_ring,
+    out = knn_ops.knn_join_cellring_adaptive(
+        trace_df, nodes, k=1, precision=precision, rings=(max_ring,),
         lat=lat, lon=lon, broadcast_neighbors=broadcast_nodes,
     )
     key = F.split(F.col("neighbor_name"), "-")

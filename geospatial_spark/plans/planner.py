@@ -74,14 +74,6 @@ def _precision_for(w: float, h: float) -> int:
     return best
 
 
-def choose_precision(polys_df: DataFrame) -> int:
-    """Coarsest precision with avg cells/polygon <= budget, from bboxes.
-
-    Uses only the polygon bbox columns (minx..maxy) — one tiny agg."""
-    _, w, h = _poly_stats(polys_df)
-    return _precision_for(w, h)
-
-
 def choose_pip_plan(
     points_df: DataFrame,
     polys_df: DataFrame,
@@ -135,8 +127,10 @@ def choose_pip_plan(
 def choose_knn_params(
     n_neighbors_total: int, k: int, max_candidates: int = 4096
 ) -> tuple[int, int]:
-    """(precision, max_ring) for knn_join_cellring: coarse enough that the
-    expected ring population ≥ 4k, fine enough to bound candidates."""
+    """(precision, first ring) for knn_join_cellring_adaptive: coarse
+    enough that the expected ring population ≥ 4k, fine enough to bound
+    candidates.  Callers pass ``rings=(ring, 3 * ring + 1)`` so points in
+    sparse regions escalate once before the exact tail."""
     for precision in range(6, 0, -1):
         lon_cells = 1 << ((5 * precision + 1) // 2)
         lat_cells = 1 << ((5 * precision) // 2)

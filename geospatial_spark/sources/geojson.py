@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -227,20 +226,6 @@ def read_geojson(
     collection = layout == "collection"
     text = spark.read.text(path, wholetext=collection)
     return _parse_text_df(text, collection)
-
-
-def read_geojson_stream(spark: SparkSession, path: str) -> DataFrame:
-    """STREAMING GeoJSON ingest: ``readStream.text`` over a directory of
-    newline-delimited Feature files → the same parsed relation as
-    ``read_geojson`` (feature_id, geom_type, WKB geometry, properties,
-    error), micro-batch by micro-batch.  New files dropped into ``path``
-    flow through the identical Arrow-batched parser — compose with the
-    engine's watermarked aggregations or the exactly-once icelite sink
-    (``streaming.sink.stream_to_icelite``) downstream.  JSONL only: a
-    FeatureCollection file is not line-splittable and has no incremental
-    reading story."""
-    text = spark.readStream.text(path)
-    return _parse_text_df(text, collection=False)
 
 
 def _parse_text_df(text: DataFrame, collection: bool) -> DataFrame:

@@ -25,8 +25,8 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bucketed-table tests (test_bucketed_join.py) saveAsTable here;
-        # keep the warehouse out of the repo checkout, pid-suffixed so two
+        # Spark's default warehouse is ./spark-warehouse: keep any catalog
+        # table a test saves out of the repo checkout, pid-suffixed so two
         # concurrent pytest sessions never overwrite each other's tables
         .config("spark.sql.warehouse.dir", _WAREHOUSE)
         .config("spark.ui.enabled", "false")

@@ -155,21 +155,6 @@ def test_domain_cap_duckdb_mirror(spark, tmp_path):
     assert got == want
 
 
-def test_domain_stats_shares(spark):
-    df = _synthetic(spark, n=2000)
-    stats = dm.domain_stats(df.withColumn("lang", F.lit("en"))).collect()
-    total = sum(r["n_docs"] for r in stats)
-    assert total == 2000
-    mega = [r for r in stats if r["domain"] == "example.com"]
-    assert len(mega) == 1 and mega[0]["n_docs"] == 1000
-    assert mega[0]["share_ppm"] == 500000
-    assert mega[0]["n_langs"] == 1
-    # every d{j}.shop.example.co.uk subdomain collapses into ONE
-    # registrable domain — the exact behavior the cap needs (a site can't
-    # dodge it by sharding subdomains)
-    assert {r["domain"] for r in stats} == {"example.com", "example.co.uk"}
-
-
 def test_domain_cap_plan_two_keyed_exchanges_no_python(spark):
     df = _synthetic(spark, n=200)
     plan = _plan(dm.domain_cap(df, 3, id_col="page_id"))

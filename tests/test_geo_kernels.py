@@ -36,22 +36,6 @@ def test_geohash_roundtrip_grid():
         assert np.array_equal(gh.encode(clat, clon, p), cells)
 
 
-def test_geohash_parent_is_prefix():
-    cells = gh.encode([48.8566], [2.3522], 9)
-    assert gh.cell_parent(cells, 5)[0] == cells[0][:5]
-
-
-def test_geohash_neighbors():
-    ring = gh.neighbors_ring(["u4pru"], 5, ring=1)
-    assert ring.shape == (1, 9)
-    assert "u4pru" in set(ring[0])
-    assert len(set(ring[0])) == 9
-    # neighbor of neighbor comes back (symmetry)
-    for nb in ring[0]:
-        back = set(gh.neighbors_ring([nb], 5, ring=1)[0])
-        assert "u4pru" in back
-
-
 # ------------------------------------------------------------------------- s2
 def test_s2_face_cells():
     # face cell tokens are "1", "3", "5", "7", "9", "b" (public S2 fact)
@@ -274,13 +258,6 @@ def test_tile_bounds_roundtrip():
     cy = (s + n) / 2
     bx, by = tl.lonlat_to_tile(cx, cy, z)
     assert np.array_equal(bx, xs) and np.array_equal(by, ys)
-
-
-def test_quadkey():
-    qk = tl.tile_quadkey(np.array([3]), np.array([5]), 3)
-    # x=3(011), y=5(101): digits (y<<1|x) per level from MSB: (1,0,1)&(0,1,1)
-    # level2: y bit 1, x bit 0 → 2; level1: y 0, x 1 → 1; level0: y1 x1 → 3
-    assert int(qk[0]) == (2 << 4) + (1 << 2) + 3
 
 
 # ------------------------------------------------------------------- polyline

@@ -162,37 +162,3 @@ def test_write_geojson_roundtrip(spark, tmp_path):
         assert back[n]["properties"]["name"] == n
         assert back[n]["error"] is None
 
-
-def test_read_geojson_stream_matches_batch(spark, tmp_path):
-    """Streaming ingest over a directory of JSONL Feature files parses the
-    same rows as the batch reader (availableNow drain → memory sink)."""
-    d = os.path.join(str(tmp_path), "stream_in")
-    os.makedirs(d)
-    names = list(GEOMS)
-    with open(os.path.join(d, "a.jsonl"), "w") as f:
-        for n in names[:2]:
-            f.write(json.dumps({"type": "Feature", "id": n,
-                                "geometry": gj.geom_to_geojson_geometry(GEOMS[n]),
-                                "properties": {"src": "a"}}) + "\n")
-    with open(os.path.join(d, "b.jsonl"), "w") as f:
-        for n in names[2:]:
-            f.write(json.dumps({"type": "Feature", "id": n,
-                                "geometry": gj.geom_to_geojson_geometry(GEOMS[n]),
-                                "properties": {"src": "b"}}) + "\n")
-    stream = gj.read_geojson_stream(spark, d)
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("gj_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["feature_id"]: r for r in spark.sql("SELECT * FROM gj_stream_out").collect()}
-    want = {r["feature_id"]: r for r in gj.read_geojson(spark, d).collect()}
-    assert set(got) == set(want) == set(GEOMS)
-    for n in GEOMS:
-        assert bytes(got[n]["geometry"]) == bytes(want[n]["geometry"])
-        assert got[n]["error"] is None

@@ -468,14 +468,10 @@ def test_rewrite_row_conservation_guard(spark, workdir):
     assert sum(r["row_count"] for r in man["partitions"]) == len(before)
 
 
-@pytest.mark.parametrize("writer", ["write_partitioned", "append_batch"])
-def test_batch_writers_row_conservation_guard(spark, workdir, monkeypatch, writer):
-    """Both batch writers refuse a commit whose read-back lost rows: a
-    batch directory deleted between the data write and the stats read-back
-    (the concurrent-GC / partial-write class) must abort the commit loudly
-    with nothing committed — before, the two batch writers recorded
-    row_count 0 for the lost partitions and silently shrank the table."""
-    df = _src(spark)
+def _second_commit(df, workdir, writer):
+    """Commit the first of two commits of ``df`` through ``writer`` (v1)
+    and return ``write`` for the second: a write_partitioned resume of the
+    pids batch 0 left, or an append_batch of the other half."""
     halves = [df.filter(F.col("doc_id") % 2 == r) for r in (0, 1)]
 
     def write(i):
@@ -495,28 +491,108 @@ def test_batch_writers_row_conservation_guard(spark, workdir, monkeypatch, write
             write(0)
     else:
         write(0)
-    v = ice._version_pointer(workdir, "t")
-    assert v == 1
+    assert ice._version_pointer(workdir, "t") == 1
+    return lambda: write(1)
 
-    orig = ice._partition_stats
 
-    def racing_gc(frame, key_col, group_cols):
-        live = {r["batch"] for r in ice.current_manifest(workdir, "t")["partitions"]}
-        for d in glob.glob(f"{workdir}/t/data/__batch=*"):
-            if d.split("__batch=")[1] not in live:
-                shutil.rmtree(d)
-        return orig(frame, key_col, group_cols)
+def _gc_orphans_now(workdir):
+    """Remove every batch directory the committed manifest does not
+    reference — what a concurrent orphan GC does to an in-flight batch."""
+    live = {r["batch"] for r in ice.current_manifest(workdir, "t")["partitions"]}
+    for d in glob.glob(f"{workdir}/t/data/__batch=*"):
+        if d.split("__batch=")[1] not in live:
+            shutil.rmtree(d)
 
-    monkeypatch.setattr(ice, "_partition_stats", racing_gc)
-    with pytest.raises(RuntimeError, match="row-conservation"):
-        write(1)
+
+def _refused_then_retried(spark, df, workdir, monkeypatch, write, match):
+    """The patched ``write`` must raise ``match`` with nothing committed
+    and no marker left; an unpatched retry lands one copy that verifies."""
+    with pytest.raises(RuntimeError, match=match):
+        write()
     monkeypatch.undo()
-    assert ice._version_pointer(workdir, "t") == v
+    assert ice._version_pointer(workdir, "t") == 1
     assert not os.listdir(os.path.join(workdir, "t", "metadata", "inflight"))
 
-    man = write(1)
-    assert man["version"] == v + 1
+    man = write()
+    assert man["version"] == 2
     got = _rows(ice.read_table(spark, workdir, "t"))
     assert got == _rows(df)
     assert sum(r["row_count"] for r in man["partitions"]) == len(got)
     assert ice.verify_table(spark, workdir, "t")["ok"]
+
+
+@pytest.mark.parametrize("writer", ["write_partitioned", "append_batch"])
+def test_batch_writers_row_conservation_guard(spark, workdir, monkeypatch, writer):
+    """Both batch writers refuse a commit whose read-back lost rows: a
+    batch directory deleted between the data write and the stats read-back
+    (the concurrent-GC / partial-write class) must abort the commit loudly
+    with nothing committed — before, the two batch writers recorded
+    row_count 0 for the lost partitions and silently shrank the table."""
+    df = _src(spark)
+    write = _second_commit(df, workdir, writer)
+    orig = ice._partition_stats
+
+    def racing_gc(frame, key_col, group_cols):
+        _gc_orphans_now(workdir)
+        return orig(frame, key_col, group_cols)
+
+    monkeypatch.setattr(ice, "_partition_stats", racing_gc)
+    _refused_then_retried(spark, df, workdir, monkeypatch, write, "row-conservation")
+
+
+@pytest.mark.parametrize("writer", ["write_partitioned", "append_batch"])
+def test_gc_after_read_back_is_refused_at_swap(spark, workdir, monkeypatch, writer):
+    """A batch directory an orphan GC deletes AFTER the commit's read-back
+    (which found its rows) but before the manifest swap must not be
+    committed: the swap re-checks the directory under the commit lock and
+    refuses, so the manifest never points at rows that are gone."""
+    df = _src(spark)
+    write = _second_commit(df, workdir, writer)
+    orig = ice._partition_stats
+
+    def gc_after_read_back(frame, key_col, group_cols):
+        stats = orig(frame, key_col, group_cols)
+        assert sum(r["row_count"] for r in stats) > 0
+        _gc_orphans_now(workdir)
+        return stats
+
+    monkeypatch.setattr(ice, "_partition_stats", gc_after_read_back)
+    _refused_then_retried(
+        spark, df, workdir, monkeypatch, write,
+        "removed after its rows were read back",
+    )
+
+
+def test_orphan_gc_waits_for_the_commit_lock(spark, workdir):
+    """Orphan GC runs under the commit flock: while another holder has the
+    lock, an unmarked orphan directory must survive; once the lock is
+    released the GC pass removes it (and leaves committed batches)."""
+    import fcntl
+    import threading
+    import time
+
+    man = ice.append_batch(
+        _src(spark), workdir, "t", stage="ing", key_col="key",
+        n_partitions=4, batch_tag="sb0",
+    )
+    committed = os.path.join(workdir, "t", "data", "__batch=sb0")
+    orphan = os.path.join(workdir, "t", "data", "__batch=sb-orphan", "__pid=0")
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "part-0.parquet"), "wb") as f:
+        f.write(b"x")
+
+    with open(os.path.join(workdir, "t", "metadata", ".commit.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        gc = threading.Thread(
+            target=ice._gc_orphan_batches, args=(workdir, "t", man), daemon=True
+        )
+        try:
+            gc.start()
+            time.sleep(0.5)
+            assert os.path.isdir(orphan)
+        finally:
+            fcntl.flock(lock, fcntl.LOCK_UN)
+    gc.join(timeout=30)
+    assert not gc.is_alive()
+    assert not os.path.exists(os.path.dirname(orphan))
+    assert os.path.isdir(committed)

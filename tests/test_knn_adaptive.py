@@ -65,19 +65,6 @@ def _exact(pts, nb, k):
     )
 
 
-def test_fixed_global_ring_returns_short_rows_on_skew(spark, skewed):
-    """Pin the r3 limitation the adaptive path exists to fix."""
-    pts, nb = skewed
-    out = knn_ops.knn_join_cellring(pts, nb, k=5, precision=2, max_ring=3)
-    per_point = {
-        r["pid"]: r["n"]
-        for r in out.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert per_point.get("p_dense1") == 5
-    # the deep-ocean point's 5th neighbor lies beyond ring 3 → short rows
-    assert per_point.get("p_ocean1", 0) < 5
-
-
 def test_adaptive_exact_on_density_skew(spark, skewed):
     pts, nb = skewed
     got = (

@@ -6,11 +6,6 @@ from geospatial_spark.plans import planner
 from geospatial_spark.sources import pages as src
 
 
-def test_choose_precision_regions(spark):
-    p = planner.choose_precision(src.regions(spark))
-    assert 2 <= p <= 6  # few-degree boxes → mid precision
-
-
 def test_pip_plan_small_polys_broadcasts(spark):
     pts = src.extract_points(
         src.pages(spark, "/root/testdata/sf0.001"), src.gazetteer(spark)
@@ -66,13 +61,13 @@ def test_force_strategy_still_derives_salt(spark):
 
 
 def test_knn_cellring_planned_agrees_with_exact(spark):
-    """The planner-parameterized cell-ring kNN (knn_join_cellring_planned —
-    precision/ring derived from neighbor density, the production entry
-    point) must agree exactly with the brute-force baseline on the
-    fixture: the chosen ring window covers every true 5th neighbor."""
+    """The planner-parameterized cell-ring kNN (precision and first ring
+    from ``choose_knn_params`` over the neighbor count, then
+    ``knn_join_cellring_adaptive`` with a broadcast neighbor side — the
+    way a serving caller runs it) must agree exactly with the brute-force
+    baseline on the fixture."""
     from geospatial_spark.operators import knn as knn_ops
     from geospatial_spark.sources import constants as C
-    from geospatial_spark.sources import pages as src
 
     SF = "/root/testdata/sf0.001"
     pts = (
@@ -83,8 +78,11 @@ def test_knn_cellring_planned_agrees_with_exact(spark):
     gaz_rows = [(n, la, lo) for _, n, la, lo, _ in C.gazetteer_rows()]
     keys = ["url", "entity", "neighbor_name", "rank"]
     exact = knn_ops.knn_join_broadcast(pts, gaz_rows, k=5).select(*keys)
-    planned = knn_ops.knn_join_cellring_planned(
-        pts, src.gazetteer(spark).select("name", "lat", "lon"), k=5
+    precision, ring = planner.choose_knn_params(len(gaz_rows), 5)
+    planned = knn_ops.knn_join_cellring_adaptive(
+        pts, src.gazetteer(spark).select("name", "lat", "lon"), k=5,
+        precision=precision, rings=(ring, 3 * ring + 1),
+        broadcast_neighbors=True,
     ).select(*keys)
     n_exact = exact.count()
     assert planned.count() == n_exact

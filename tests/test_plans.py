@@ -145,34 +145,15 @@ def test_broadcast_pip_join_rect_fast_path_has_no_python(spark):
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", forced)) == 1
 
 
-def test_knn_cellring_has_no_python_before_rerank(spark):
-    """Round-3 int-grid kNN: quantize + ring explode + equi-join + haversine
-    re-rank are all JVM — no Python eval node anywhere in the plan.  The
-    PROBE join itself must be a broadcast when the caller hints the small
-    neighbor side (round-4 find: the createDataFrame-backed gazetteer is an
-    ExistingRDD with no size stats, so without the hint Catalyst
-    SortMergeJoins and shuffles the EXPLODED 49-cells-per-point relation
-    — the worst shuffle this operator can emit at scale)."""
-    from geospatial_spark.operators import knn as knn_ops
-
-    pts = src.extract_points(src.pages(spark, SF), src.gazetteer(spark))
-    out = knn_ops.knn_join_cellring(
-        pts.select("url", "entity", "lat", "lon"),
-        src.gazetteer(spark).select("name", "lat", "lon"),
-        k=5, precision=2, max_ring=3, broadcast_neighbors=True,
-    )
-    p = _plan(out)
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    # the __probe candidate join is broadcast — no SMJ on __probe anywhere
-    probe_smj = re.findall(r"SortMergeJoin[^\n]*\n[^\n]*__probe", p)
-    assert not probe_smj, p[:2000]
-    assert re.search(r"BroadcastHashJoin[^\n]*\n[^\n]*__probe", p)
-
-
 def test_knn_cellring_adaptive_probe_join_broadcast(spark):
-    """The adaptive path's round-1 candidate join inherits the same
-    broadcast hint; no Python nodes anywhere (checkpoint + windows +
-    exact tail included)."""
+    """Int-grid kNN: quantize + ring explode + equi-join + haversine
+    re-rank are all JVM — no Python eval node anywhere in the plan
+    (checkpoint + windows + exact tail included).  The PROBE join itself
+    must be a broadcast when the caller hints the small neighbor side
+    (round-4 find: the createDataFrame-backed gazetteer is an ExistingRDD
+    with no size stats, so without the hint Catalyst SortMergeJoins and
+    shuffles the EXPLODED 49-cells-per-point relation — the worst shuffle
+    this operator can emit at scale)."""
     from geospatial_spark.operators import knn as knn_ops
 
     pts = src.extract_points(src.pages(spark, SF), src.gazetteer(spark))
@@ -183,7 +164,8 @@ def test_knn_cellring_adaptive_probe_join_broadcast(spark):
     )
     p = _plan(out)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert not re.findall(r"SortMergeJoin[^\n]*\n[^\n]*__probe", p)
+    assert not re.findall(r"SortMergeJoin[^\n]*\n[^\n]*__probe", p), p[:2000]
+    assert re.search(r"BroadcastHashJoin[^\n]*\n[^\n]*__probe", p)
 
 
 def test_bench_force_all_columns_set_matches_count_pruning_audit(spark):
