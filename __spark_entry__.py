@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geospatial_spark.functions import udfs
+from geospatial_spark.geo.geohash import BASE32
 from geospatial_spark.operators import buffer as buf_ops
 from geospatial_spark.operators import dedup as dd
 from geospatial_spark.operators import domains as dmn
@@ -648,9 +649,6 @@ def _q_clip_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts[0].unionByName(parts[1])
 
 
-_OVERLAY_GEOMS = ("inter", "diff", "diff_ba", "union", "symdiff")
-
-
 def _q_overlay_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U10 GENERAL overlay JOIN (round-5 verdict item 1 — ref poverlay
     gutils.py:532-600 over two arbitrary GeoDataFrames): BOTH sides are
@@ -683,7 +681,7 @@ def _q_overlay_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("region_id"), F.col("name"), F.col("n_pieces"),
         F.col("area_a_e12"), F.col("area_b_e12"),
     ]
-    for g in _OVERLAY_GEOMS:
+    for g in udfs.OVERLAY_GEOMS:
         cols += [
             F.col(f"{g}_e12"),
             F.col(f"{g}_n_rings"),
@@ -1132,9 +1130,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-_B36 = "0123456789abcdefghijklmnopqrstuvwxyz"
-
-
 def _quant_sql(coord: str, lo: float, span: float, cells: int) -> str:
     """The geohash quantizer (geo/geohash.py:quantize) as SQL: floor + clip."""
     return (
@@ -1171,8 +1166,8 @@ def _geohash2_sql(qx: str, qy: str) -> str:
     )
     code = f"({bits})"
     return (
-        f"substr('{_B36[:10]}bcdefghjkmnpqrstuvwxyz', CAST({code} // 32 AS INT) + 1, 1) || "
-        f"substr('{_B36[:10]}bcdefghjkmnpqrstuvwxyz', CAST({code} % 32 AS INT) + 1, 1)"
+        f"substr('{BASE32}', CAST({code} // 32 AS INT) + 1, 1) || "
+        f"substr('{BASE32}', CAST({code} % 32 AS INT) + 1, 1)"
     )
 
 
@@ -1450,7 +1445,7 @@ SELECT p.region_id, p.name, CAST(m.n_pieces AS INT) AS n_pieces,
                 f"       CAST(m.{g}_n_rings AS INT) AS {g}_n_rings,\n"
                 f"       CAST(m.{g}_ring_pts AS INT) AS {g}_ring_pts,\n"
                 f"       CAST(m.{g}_md5 AS VARCHAR) AS {g}_md5"
-                for g in _OVERLAY_GEOMS
+                for g in udfs.OVERLAY_GEOMS
             )
             + "\nFROM op p JOIN ovm m ON m.region_id = p.region_id AND m.name = p.name"
         ),

@@ -588,6 +588,11 @@ def wkb_bbox_udf():
     return _bbox
 
 
+#: the five boolean geometries of ``overlay_all_udf``, in column order; each
+#: prefixes its ``{g}_e12`` / ``{g}_wkt`` / ``{g}_n_rings`` / ``{g}_ring_pts``
+OVERLAY_GEOMS = ("inter", "diff", "diff_ba", "union", "symdiff")
+
+
 def overlay_all_udf(quant: float = 1e-9):
     """The WKB×WKB pair kernel of ``operators.overlay.overlay_join``
     (reference poverlay ``gutils.py:532-600`` — all five ``how`` modes from
@@ -598,7 +603,7 @@ def overlay_all_udf(quant: float = 1e-9):
     NULL wkt and 0 counts; a NULL input geometry yields an all-NULL row."""
 
     fields = []
-    for g in ("inter", "diff", "diff_ba", "union", "symdiff"):
+    for g in OVERLAY_GEOMS:
         fields += [f"{g}_e12 bigint", f"{g}_wkt string",
                    f"{g}_n_rings int", f"{g}_ring_pts int"]
     schema = "n_pieces int, area_a_e12 bigint, area_b_e12 bigint, " + ", ".join(fields)

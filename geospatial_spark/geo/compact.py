@@ -15,6 +15,7 @@ from collections import Counter
 import numpy as np
 
 from . import s2 as s2k
+from .geohash import BASE32
 
 
 def compact_geohash(cells: list[str]) -> list[str]:
@@ -33,7 +34,6 @@ def compact_geohash(cells: list[str]) -> list[str]:
 
 
 def uncompact_geohash(cells: list[str], precision: int) -> list[str]:
-    b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
     out: set[str] = set()
     frontier = list(cells)
     while frontier:
@@ -41,7 +41,7 @@ def uncompact_geohash(cells: list[str], precision: int) -> list[str]:
         if len(c) == precision:
             out.add(c)
         elif len(c) < precision:
-            frontier.extend(c + ch for ch in b32)
+            frontier.extend(c + ch for ch in BASE32)
         else:
             raise ValueError(f"cell {c} finer than target precision {precision}")
     return sorted(out)

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import numpy as np
 
-_B32 = np.frombuffer(b"0123456789bcdefghjkmnpqrstuvwxyz", dtype=np.uint8)
+#: the geohash base-32 alphabet (no a, i, l, o); digit value = index
+BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+_B32 = np.frombuffer(BASE32.encode(), dtype=np.uint8)
 _B32_INV = np.full(256, 255, dtype=np.uint8)
 _B32_INV[_B32] = np.arange(32, dtype=np.uint8)
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+from ..geo.geohash import BASE32
 
 
 def compact_geohash_df(cells: DataFrame, col: str = "cell") -> DataFrame:
@@ -70,7 +70,7 @@ def uncompact_geohash_df(cells: DataFrame, precision: int, col: str = "cell") ->
     persists are released once the next round materializes (a long-lived
     session otherwise accumulates one cached round per level)."""
     cur = cells.select(F.col(col).alias("cell")).distinct()
-    children = F.array(*[F.lit(c) for c in _B32])
+    children = F.array(*[F.lit(c) for c in BASE32])
     prev = None
     for _ in range(precision - 1):
         cur = cur.persist()

@@ -14,8 +14,11 @@ expansion".  Two physical strategies:
   neighbors in its Chebyshev cell ring, exact haversine re-rank with a
   window ``row_number() <= k``; points whose k-th candidate is not
   provably nearest escalate to the next ring, and the rest fall back to
-  an exact broadcast rank.  The ring join is a hash equi-join on cell
-  after exploding the query side's ring cells (``_ring_join``).
+  an exact broadcast rank.  The ring join is a hash left join on cell
+  after exploding the query side's ring cells (``_ring_join``).  The
+  whole escalation is one lazy plan in which each point flows through
+  one lineage: a round's unsatisfied points are its own rank-1 rows, and
+  nothing is checkpointed, persisted or counted between rounds.
 """
 
 from __future__ import annotations
@@ -149,27 +152,31 @@ def knn_join_cellring_adaptive(
     + rank, ties broken (dist, name)), verified per-point on a
     density-skewed fixture in tests/test_knn_adaptive.py.
 
-    Scale notes: bounded driver rounds (len(rings), each one keyed join +
-    one window over the REMAINDER only, persisted/unpersisted per round
-    like compact_s2_df); the fallback broadcasts only the remainder.  The
-    1 µm guarantee margin absorbs float noise (distances are ≥ mm-scale
-    apart or exactly equal — both engines share the formula).  The query
-    side is localCheckpoint-ed once up front: every round's ring join AND
-    the tail's anti-join re-read it, and for a derived point relation
-    that means recomputing the full upstream lineage per pass otherwise
-    (A/B-measured at sf0.1 on the pages→points derivation: checkpoint
-    beat both recompute and MEMORY_AND_DISK persist in every paired
-    trial; same pattern as dedup's pointer-jumping rounds)."""
+    Precondition: the rows of ``points_df`` are distinct on their columns
+    (the rank window partitions by every point column, so two equal rows
+    would be one point with doubled candidates).
+
+    One lazy plan, one lineage per point: building the frame runs no
+    Spark job.  A round's unsatisfied points are its own rank-1 rows
+    (``_ring_join`` keeps one unmatched own-cell row for a point with no
+    candidate, so every point of the round reaches its window), never an
+    anti-join against the input; the satisfied and the unsatisfied branch
+    share the window's shuffle through exchange reuse, so nothing is
+    persisted, checkpointed or counted on the driver.  ``rank <= k`` is
+    filtered BEFORE the satisfaction window: Spark then plans a
+    WindowGroupLimit and shuffles at most k rows per point (stats over the
+    unfiltered window would shuffle every candidate row).  The 1 µm guarantee margin absorbs float
+    noise (distances are ≥ mm-scale apart or exactly equal — both engines
+    share the formula)."""
     import math
+    from functools import reduce
 
-    from pyspark import StorageLevel
-
-    from ..functions import caching
     from ..geo import geohash as gh
 
     lon_bits, lat_bits = gh._bits(precision)
     NI, NJ = 1 << lon_bits, 1 << lat_bits
     point_cols = list(points_df.columns)
+    out_cols = [*point_cols, "neighbor_name", "rank", "dist_m"]
     s_lat = math.pi / NJ
     s_lon = 2.0 * math.pi / NI
     R = dist.EARTH_RADIUS_M
@@ -188,43 +195,30 @@ def knn_join_cellring_adaptive(
             f"{precision}: raise precision or shrink the rings"
         )
 
-    points_df = points_df.localCheckpoint(eager=False)
-
     nb = neighbors_df.select(
         F.col(name).alias("neighbor_name"),
         F.col(n_lat).alias("__nlat"),
         F.col(n_lon).alias("__nlon"),
     )
+    # NULLS LAST: a point's unmatched own-cell row ranks after every real
+    # candidate
+    w = Window.partitionBy(*point_cols).orderBy(
+        F.col("dist_m").asc_nulls_last(), F.col("neighbor_name").asc()
+    )
+    # satisfaction stats share the rank window's partitioning AND
+    # ordering (full-partition frame) — WindowExec appends them to the
+    # same sorted pass, zero extra Exchange or Sort
+    wu = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     def _ranked(cand: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*[F.col(c) for c in point_cols]).orderBy(
-            F.col("dist_m").asc(), F.col("neighbor_name").asc()
-        )
         return cand.withColumn(
             "dist_m",
             udfs.haversine_col(F.col(lat), F.col(lon), F.col("__nlat"), F.col("__nlon")),
         ).withColumn("rank", F.row_number().over(w))
 
     parts: list[DataFrame] = []
-    remaining = points_df
-    prev_persisted: DataFrame | None = None
-    n_rem = -1  # unknown until first count
-    for ri, ring in enumerate(rings):
-        cand = _ring_join(
-            remaining, nb, precision, ring, lat, lon,
-            broadcast_nb=broadcast_neighbors,
-        )
-        ranked = _ranked(cand)
-        # satisfaction stats share the rank window's partitioning AND
-        # ordering (full-partition frame) — WindowExec appends them to the
-        # same sorted pass, zero extra Exchange or Sort
-        wu = (
-            Window.partitionBy(*[F.col(c) for c in point_cols])
-            .orderBy(F.col("dist_m").asc(), F.col("neighbor_name").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        kth = F.max(F.when(F.col("rank") <= k, F.col("dist_m"))).over(wu)
-        cnt = F.count(F.lit(1)).over(wu)
+    todo = points_df
+    for ring in rings:
         g = F.lit(R) * F.least(
             F.lit(ring * s_lat),
             F.asin(
@@ -232,45 +226,29 @@ def knn_join_cellring_adaptive(
                 * F.lit(math.sin(min(ring * s_lon, math.pi / 2.0)))
             ),
         )
-        ok = (cnt >= k) & (kth < g - F.lit(1e-6))
-        scored = caching.track(
-            ranked.filter(F.col("rank") <= k)
+        ok = (F.count("__nb").over(wu) >= k) & (F.max("dist_m").over(wu) < g - F.lit(1e-6))
+        # a NULL coordinate (NULL distances, NULL g) is unsatisfied, not lost
+        ok = F.coalesce(ok, F.lit(False))
+        scored = (
+            _ranked(_ring_join(todo, nb, precision, ring, lat, lon, broadcast_nb=broadcast_neighbors))
+            .filter(F.col("rank") <= k)
             .withColumn("__ok", ok)
-            .select(*point_cols, "neighbor_name", "rank", "dist_m", "__ok")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        parts.append(scored.filter(F.col("__ok")).drop("__ok"))
-        sat_keys = scored.filter(F.col("__ok")).select(*point_cols)
-        remaining = remaining.join(sat_keys, point_cols, "left_anti")
-        if ri == len(rings) - 1:
-            break  # last ring: the tail consumes `remaining` exactly once —
-            # skip the persist + count round-trip (one fewer driver job)
-        remaining = caching.track(remaining.persist(StorageLevel.MEMORY_AND_DISK))
-        n_rem = remaining.count()  # also materializes `scored` upstream
-        if prev_persisted is not None:
-            prev_persisted.unpersist()
-        prev_persisted = remaining
-        if n_rem == 0:
-            break
-    if n_rem != 0:
-        # exact fallback for the hard tail — same JVM haversine +
-        # tie-break, so the union is seamless.  Broadcast side (round-4
-        # advice): when the caller attested the NEIGHBOR side small
-        # (broadcast_neighbors, e.g. the planner counted it), broadcast
-        # that — the remainder's size is then irrelevant.  Otherwise
-        # broadcast the remainder, which is small BY CONSTRUCTION of the
-        # (now validated, ≥1-round) ring ladder: only points whose k-th
-        # neighbor outdistances the widest ring's guarantee radius.
-        if broadcast_neighbors:
-            fb = _ranked(remaining.crossJoin(F.broadcast(nb)))
-        else:
-            fb = _ranked(F.broadcast(remaining).crossJoin(nb))
-        fb = fb.filter(F.col("rank") <= k)
-        parts.append(fb.select(*point_cols, "neighbor_name", "rank", "dist_m"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        parts.append(scored.filter(F.col("__ok")).select(*out_cols))
+        todo = scored.filter(~F.col("__ok") & (F.col("rank") == 1)).select(*point_cols)
+    # exact fallback for the hard tail — same JVM haversine + tie-break, so
+    # the union is seamless.  Broadcast side (round-4 advice): when the
+    # caller attested the NEIGHBOR side small (broadcast_neighbors, e.g.
+    # the planner counted it), broadcast that — the remainder's size is
+    # then irrelevant.  Otherwise broadcast the remainder, which is small
+    # BY CONSTRUCTION of the (validated, ≥1-round) ring ladder: only points
+    # whose k-th neighbor outdistances the widest ring's guarantee radius.
+    if broadcast_neighbors:
+        fb = _ranked(todo.crossJoin(F.broadcast(nb)))
+    else:
+        fb = _ranked(F.broadcast(todo).crossJoin(nb))
+    parts.append(fb.filter(F.col("rank") <= k).select(*out_cols))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _ring_join(
@@ -285,9 +263,15 @@ def _ring_join(
     """Grid-quantized Chebyshev-ring candidate join (the pure-JVM core of
     every adaptive kNN round): explode each point to its (2·ring+1)² ring
     cells on the geohash integer grid (lon wrap via pmod, lat cut at the
-    poles), equi-join on the BIGINT grid id.  ``nb`` must carry
+    poles), LEFT join on the BIGINT grid id.  ``nb`` must carry
     (neighbor_name, __nlat, __nlon); the caller has already checked that
     the ring does not span the longitude grid.
+
+    Every candidate row carries the marker ``__nb`` = TRUE; the join keeps
+    exactly one unmatched row per point, for its own cell, with ``__nb``
+    (and the neighbor columns) NULL — so a point with no candidate still
+    reaches the caller's window and escalates.  Count candidates by ``__nb``, never by ``neighbor_name``:
+    a neighbor whose name is NULL is a candidate.
 
     ``broadcast_nb``: hint the neighbor side broadcast.  This matters
     because a ``createDataFrame``-backed neighbor relation is an
@@ -327,12 +311,15 @@ def _ring_join(
             "__probe",
             F.pmod(F.col("__qx") + F.col("__di"), F.lit(NI)) * NJ + F.col("__nqy"),
         )
-        .drop("__di", "__dj", "__qx", "__qy", "__nqy")
     )
     nbp = nb.withColumn(
         "__probe",
         _q(F.col("__nlon"), 180.0, 360.0, NI) * NJ + _q(F.col("__nlat"), 90.0, 180.0, NJ),
-    )
+    ).withColumn("__nb", F.lit(True))
     if broadcast_nb:
         nbp = F.broadcast(nbp)
-    return pts.join(nbp, "__probe", "inner").drop("__probe")
+    return (
+        pts.join(nbp, "__probe", "left")
+        .filter(F.col("__nb") | ((F.col("__di") == 0) & (F.col("__dj") == 0)))
+        .drop("__probe", "__di", "__dj", "__qx", "__qy", "__nqy")
+    )

@@ -12,6 +12,7 @@ from __future__ import annotations
 import functools as _functools
 import hashlib as _hashlib
 
+from ..functions.udfs import OVERLAY_GEOMS
 from . import constants as C
 
 
@@ -355,9 +356,6 @@ def star_bbox_values() -> str:
     return f"sbb(name, sminx, sminy, smaxx, smaxy) AS (VALUES {', '.join(vals)})"
 
 
-_OVERLAY_GEOMS = ("inter", "diff", "diff_ba", "union", "symdiff")
-
-
 @_functools.lru_cache(maxsize=None)
 def overlay_join_values() -> str:
     """VALUES CTE body for the ``overlay_join`` registry entry: one row per
@@ -411,7 +409,7 @@ def overlay_join_values() -> str:
     if not vals:
         raise RuntimeError("overlay_join_values: empty kernel map")
     cols = ["region_id", "name", "n_pieces", "area_a_e12", "area_b_e12"]
-    for g in _OVERLAY_GEOMS:
+    for g in OVERLAY_GEOMS:
         cols += [f"{g}_e12", f"{g}_n_rings", f"{g}_ring_pts", f"{g}_md5"]
     return f"ovm({', '.join(cols)}) AS (VALUES {', '.join(vals)})"
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import numpy as np
 
 from geospatial_spark.geo import compact as lc
-from geospatial_spark.geo import geohash as gh
 from geospatial_spark.geo import s2 as s2k
 from geospatial_spark.operators import compact as dc
 

@@ -11,7 +11,6 @@ import io
 import re
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from geospatial_spark.operators import domains as dm

@@ -53,6 +53,23 @@ def test_operators_handle_empty_inputs(spark):
     assert knn_ops.knn_join_broadcast(empty_pts, [("x", 0.0, 0.0)], k=5).count() == 0
 
 
+def test_knn_cellring_handles_empty_inputs(spark):
+    """The adaptive ring kNN returns 0 rows, with the point columns plus
+    (neighbor_name, rank, dist_m), over an empty point relation and over
+    an empty neighbor relation with either tail broadcast side."""
+    schema = "pid string, lat double, lon double"
+    pts = spark.createDataFrame([("p1", 48.3, 2.3), ("p2", -30.0, 60.0)], schema)
+    nb = spark.createDataFrame([("a", 48.0, 2.0)], "name string, lat double, lon double")
+    cases = [(pts.filter(F.lit(False)), nb, False)]
+    cases += [(pts, nb.filter(F.lit(False)), b) for b in (False, True)]
+    for p, n, bcast in cases:
+        out = knn_ops.knn_join_cellring_adaptive(
+            p, n, k=3, precision=2, rings=(1, 3), broadcast_neighbors=bcast
+        )
+        assert out.columns == ["pid", "lat", "lon", "neighbor_name", "rank", "dist_m"]
+        assert out.count() == 0
+
+
 def test_operators_handle_adversarial_text(spark):
     """NULL text, whitespace-only, sub-gram-length, unicode, CJK (no ascii
     tokens), and a 25k-char doc all flow through the dedup/textstats

@@ -163,8 +163,6 @@ def test_adaptive_tail_broadcasts_neighbor_side_when_attested_small(spark, skewe
     """broadcast_neighbors=True must flip the tail's broadcast side to the
     neighbor relation (the remainder's size is then irrelevant) AND stay
     exact."""
-    import io, contextlib
-
     pts, nb = skewed
     got = knn_ops.knn_join_cellring_adaptive(
         pts, nb, k=5, precision=2, rings=(1,), broadcast_neighbors=True
@@ -173,3 +171,66 @@ def test_adaptive_tail_broadcasts_neighbor_side_when_attested_small(spark, skewe
     assert sorted(
         map(tuple, got.select("pid", "neighbor_name", "rank").collect())
     ) == sorted(map(tuple, want.select("pid", "neighbor_name", "rank").collect()))
+
+
+def test_adaptive_null_named_neighbor_counts_as_candidate(spark):
+    """A neighbor whose name is NULL is a real candidate: here it is the
+    point's nearest, one geohash-p2 cell east of the point's own cell.
+    Counting or filtering candidates by ``neighbor_name`` would drop it
+    and return (i, a, j) instead of the brute-force (NULL, i, a).  A point
+    with a NULL latitude quantizes to the south-pole row, where s1-s3 give
+    it k candidates with NULL distances: it must not be satisfied there
+    but still get k rows (NULL distances, name order) from the exact tail,
+    like the brute force."""
+    nb = spark.createDataFrame(
+        [
+            (None, 48.3, 11.5),
+            ("a", 48.0, 10.0),
+            ("i", 48.5, 10.5),
+            ("j", 47.5, 9.0),
+            ("e", 60.0, 30.0),
+            ("s1", -89.0, 11.0),
+            ("s2", -88.5, 12.0),
+            ("s3", -88.0, 10.0),
+        ],
+        "name string, lat double, lon double",
+    )
+    pts = spark.createDataFrame(
+        [("p", 48.3, 11.0), ("q", None, 11.0)], "pid string, lat double, lon double"
+    )
+    got = knn_ops.knn_join_cellring_adaptive(pts, nb, k=3, precision=2, rings=(1, 3))
+    cols = ("pid", "rank", "neighbor_name", "dist_m")
+    g = sorted(map(tuple, got.select(*cols).collect()))
+    w = sorted(map(tuple, _exact(pts, nb, 3).select(*cols).collect()))
+    assert g == w
+    assert [r[2] for r in g if r[0] == "p"] == [None, "i", "a"]
+    assert len(g) == 6
+
+
+def test_adaptive_frame_builds_without_running_jobs(spark, skewed):
+    """The adaptive kNN is one lazy plan: building a two-ring frame runs
+    no Spark job (no checkpoint, persist or driver count between rounds);
+    the jobs all run under the caller's action."""
+    pts, nb = skewed
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    out, built = jobs(
+        "knn-adaptive-build",
+        lambda: knn_ops.knn_join_cellring_adaptive(pts, nb, k=5, precision=2, rings=(1, 3)),
+    )
+    assert built == 0
+    rows, ran = jobs("knn-adaptive-action", lambda: out.select("pid", "rank", "neighbor_name").collect())
+    assert ran > 0  # the tracker sees this group's jobs
+    assert sorted(map(tuple, rows)) == sorted(
+        map(tuple, _exact(pts, nb, 5).select("pid", "rank", "neighbor_name").collect())
+    )

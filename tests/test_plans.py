@@ -146,9 +146,9 @@ def test_broadcast_pip_join_rect_fast_path_has_no_python(spark):
 
 
 def test_knn_cellring_adaptive_probe_join_broadcast(spark):
-    """Int-grid kNN: quantize + ring explode + equi-join + haversine
+    """Int-grid kNN: quantize + ring explode + probe join + haversine
     re-rank are all JVM — no Python eval node anywhere in the plan
-    (checkpoint + windows + exact tail included).  The PROBE join itself
+    (ring rounds + windows + exact tail included).  The PROBE join itself
     must be a broadcast when the caller hints the small neighbor side
     (round-4 find: the createDataFrame-backed gazetteer is an ExistingRDD
     with no size stats, so without the hint Catalyst SortMergeJoins and
@@ -166,6 +166,22 @@ def test_knn_cellring_adaptive_probe_join_broadcast(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert not re.findall(r"SortMergeJoin[^\n]*\n[^\n]*__probe", p), p[:2000]
     assert re.search(r"BroadcastHashJoin[^\n]*\n[^\n]*__probe", p)
+
+
+def test_knn_cellring_final_plan_scans_points_once_uncached(spark):
+    """The adaptive kNN is one lineage per point: in the final adaptive
+    plan of the knn_cellring registry query the point derivation's
+    documents scan runs ONCE — the satisfied rows and the tail's
+    remainder share the ring round's shuffle through exchange reuse —
+    and nothing is served from a cache (no persist, no checkpoint)."""
+    import __spark_entry__ as entry_mod
+
+    df = entry_mod.queries()["knn_cellring"](spark, SF)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert p.count("documents.parquet") == 1, p[:3000]
+    assert "InMemoryTableScan" not in p
+    assert "ReusedExchange" in p
 
 
 def test_bench_force_all_columns_set_matches_count_pruning_audit(spark):
